@@ -217,7 +217,7 @@ class ExpectationViolation(RuntimeError):
 
 
 def expectations_guard(rules: list):
-    """Write-audit-publish validator for ``MergeTarget.validate_staged``:
+    """Write-audit-publish validator for ``ParquetMergeTarget.validate_staged``:
     evaluates ``rules`` against the resolved post-merge frame and raises
     :class:`ExpectationViolation` if ANY rule fires — the merge then
     takes the engine's FAILED-audit path and the target stays untouched

@@ -24,15 +24,12 @@ carries the group count ``n``; a group leaves the view when n reaches 0,
 and sums are COALESCE(SUM, 0) by definition (maintenance arithmetic cannot
 distinguish 'no non-null contributions' from 'contributions cancel to 0').
 
-Scale shape: one pruned read of the affected keys (bucket-pruned when the
-target supports it, semi-joined otherwise — Delta data skipping serves the
-same role), two tiny group-by-G aggs, one full-outer merge of (≤|G|)-row
+Scale shape: one bucket-pruned, semi-joined read of the affected keys,
+two tiny group-by-G aggs, one full-outer merge of (≤|G|)-row
 frames. The maintained view never rescans the target.
 """
 
 from __future__ import annotations
-
-import inspect
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -111,29 +108,23 @@ def apply_view_delta(
 
 
 def _changed_key_rows(target, changes: DataFrame) -> DataFrame:
-    """Pre-merge target rows for the change set's keys, read as narrowly as
-    the target allows: bucket-pruned when the target's ``read`` accepts a
-    ``buckets`` list (ParquetMergeTarget), plain read otherwise (Delta's
-    data skipping plays the pruning role there). The semi-join matches PKs
-    null-safely — the same condition ``merge()`` resolves with, so a
+    """Pre-merge target rows for the change set's keys, read bucket-pruned
+    (every sink's ``read`` takes a ``buckets`` list). The semi-join matches
+    PKs null-safely — the same condition ``merge()`` resolves with, so a
     matched update/delete on a null-PK row is never dropped from the
     subtraction term.
     """
+    from dataplatform_cdc_pipeline_spark.operators.merge_target import bucket_expr
+
     pk = list(target.cfg.pk)
     keys = changes.select(*pk).distinct()
-    if "buckets" in inspect.signature(target.read).parameters:
-        from dataplatform_cdc_pipeline_spark.operators.merge_target import bucket_expr
-
-        buckets = [
-            r["b"]
-            for r in keys.select(bucket_expr(pk, target.cfg.n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        pruned = target.read(buckets=buckets)
-    else:
-        pruned = target.read()
-    t, k = pruned.alias("t"), keys.alias("k")
+    buckets = [
+        r["b"]
+        for r in keys.select(bucket_expr(pk, target.cfg.n_buckets).alias("b"))
+        .distinct()
+        .collect()
+    ]
+    t, k = target.read(buckets=buckets).alias("t"), keys.alias("k")
     cond = None
     for c in pk:
         eq = t[c].eqNullSafe(k[c])
@@ -159,10 +150,11 @@ def maintain_view_through_merge(
     predicate (``resolve_changes``) over exactly those rows, so gated
     merge modes (``update_only_op_u`` / ``strict_ts_guard``) maintain
     correctly: a blocked change contributes its OLD row to both terms and
-    nets to zero. Works against any
-    :class:`~dataplatform_cdc_pipeline_spark.operators.target_contract.MergeTarget`;
-    the bootstrap view is derived from ``target.read()`` (typed empty frame
-    when the target does not exist yet), never from a hardcoded schema.
+    nets to zero. Works against every
+    :class:`~dataplatform_cdc_pipeline_spark.operators.merge_target.ParquetMergeTarget`
+    sink; the bootstrap view is derived from ``target.read()`` (typed empty
+    frame when the target does not exist yet), never from a hardcoded
+    schema.
     """
     new_view = view_delta_for_merge(
         target, changes, view, group_col, sum_exprs, count_col

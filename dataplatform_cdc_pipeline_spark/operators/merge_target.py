@@ -3,8 +3,9 @@
 The reference merges with engine-native DML: BigQuery ``MERGE … WHEN MATCHED
 UPDATE / WHEN NOT MATCHED INSERT`` (merge.sql:403-418) + a delete MERGE
 (merge.sql:428-436); MySQL uses UPDATE-join / INSERT-NOT-EXISTS / DELETE-join
-(step-6:431-462). Spark's native equivalent is Delta Lake's ``MERGE INTO`` —
-not available in this environment — so the engine emulates it:
+(step-6:431-462). The engine emulates that MERGE over plain parquet, with
+one sink family: :class:`ParquetMergeTarget` and its snapshot, deletion-vector
+and SCD2 subclasses.
 
 - The target is a parquet directory **hash-partitioned into N buckets on the
   PK** (``__bucket = pmod(xxhash64(pk…), N)``).
@@ -18,8 +19,7 @@ not available in this environment — so the engine emulates it:
 table; bucket count scales with table size (pick N so a bucket ≈ 1-4 GB).
 Both sides of the resolve join are hash-distributed on the same PK, so AQE
 plans a shuffle that only moves the (small) change set when the bucket side
-is large. On a production cluster this class swaps to ``DeltaTable.merge``
-with identical call semantics.
+is large.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ import json
 import logging
 import os
 import shutil
-import time
 import uuid
 
 logger = logging.getLogger("dataplatform_cdc_pipeline_spark.merge_target")
@@ -38,10 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataplatform_cdc_pipeline_spark.config import MergeConfig
-from dataplatform_cdc_pipeline_spark.operators.target_contract import (
-    MergeTarget,
-    augment_schema,
-)
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this merge's read and its commit —
@@ -64,6 +59,19 @@ BUCKET_COL = "__bucket"
 #: mysql_partition_field, config-file_5.sql:12 — the reference carries the
 #: field for the target's date-partitioned layout; this is that layout).
 PDATE_COL = "__pdate"
+
+
+def augment_schema(schema: T.StructType) -> T.StructType:
+    """Target schema = typed columns + injected audit columns (P18):
+    ``source_ts_ns_order`` (event-time survivorship order) and ``pos``
+    (source position tiebreak)."""
+    names = {f.name for f in schema.fields}
+    fields = list(schema.fields)
+    if "source_ts_ns_order" not in names:
+        fields.append(T.StructField("source_ts_ns_order", T.TimestampType()))
+    if "pos" not in names:
+        fields.append(T.StructField("pos", T.LongType()))
+    return T.StructType(fields)
 
 
 def bucket_expr(pk_cols: list[str], n_buckets: int):
@@ -90,25 +98,17 @@ def resolve_changes(
     - unmatched non-delete → source row inserted;
     - unmatched target rows pass through untouched.
     """
-    # Join strategy (r12 optimization, guide §3.1): hint shuffled-hash with
-    # the CHANGE SET as build side — a full-outer SHJ (supported since
-    # Spark 3.1) replaces the SortMergeJoin's two per-partition sorts with
-    # one hash build over the bounded batch. The change set is one deduped
-    # batch (bounded per run) while the target side is the table — at any
-    # scale the batch is the side to build. Measured on the sf0.1 resolve
-    # (scripts/join_ab_bench.py): 0.29 s → 0.22 s warm, SortMergeJoin →
-    # ShuffledHashJoin with both Sort nodes gone.
-    #
-    # Escape hatch: SHJ's build side cannot spill, so a pathological
-    # catch-up batch (outage backlog, initial load routed through the
-    # incremental path) whose deduped per-partition slice exceeds task
-    # memory would OOM where sort-merge completes. SPARK_GRAFT_RESOLVE_JOIN
-    # selects the strategy per deployment: "shuffle_hash" (default),
-    # "merge" (Spark's SMJ hint — the safe fallback for unbounded
-    # backfills), or "none" (planner's choice).
-    join_hint = os.environ.get("SPARK_GRAFT_RESOLVE_JOIN", "shuffle_hash")
+    # Join strategy: hint shuffled-hash with the CHANGE SET as build side —
+    # a full-outer SHJ (supported since Spark 3.1) replaces the
+    # SortMergeJoin's two per-partition sorts with one hash build over the
+    # bounded batch. The change set is one deduped batch (bounded per run)
+    # while the target side is the table — at any scale the batch is the
+    # side to build. Measured on the sf0.1 resolve (OPTIMIZATION_r12.md):
+    # 0.29 s → 0.22 s warm, SortMergeJoin → ShuffledHashJoin with both Sort
+    # nodes gone. To re-time the merge layer (time, jobs, stages, tasks):
+    # python3 perfbench/run.py --workload cdc_trickle --seed 1 --seconds 8 --trace 1
     t = target_rows.withColumn("__t_present", F.lit(True)).alias("t")
-    s_a = (changes if join_hint == "none" else changes.hint(join_hint)).alias("s")
+    s_a = changes.hint("shuffle_hash").alias("s")
     cond = None
     for c in cfg.pk:
         # null-safe: a null-valued PK upserts its own slot (contract-tested)
@@ -163,13 +163,34 @@ def resolve_changes(
     )
 
 
-class ParquetMergeTarget(MergeTarget):
+class ParquetMergeTarget:
     """A mutable typed 'silver' table backed by bucketed parquet (K1-K4).
 
-    One of two implementations of the
-    :class:`~dataplatform_cdc_pipeline_spark.operators.target_contract.MergeTarget`
-    contract (the other is DeltaMergeTarget — the production swap-in);
-    tests/test_merge_target_contract.py runs the same suite against both.
+    The engine's one merge sink; the snapshot, deletion-vector and SCD2
+    sinks subclass it. ``tests/test_merge_target_contract.py`` runs the
+    contract below against this class and the snapshot and deletion-vector
+    sinks, under each storage layout:
+
+    - ``merge(changes)`` takes a DEDUPED change set (one row per PK)
+      carrying the target data columns plus ``__op`` ('c'/'u'/'d') and
+      optionally ``__load_ts``;
+    - ``__op != 'd'`` → matched rows update all columns, unmatched rows
+      insert (merge.sql:403-418);
+    - ``__op = 'd'`` → matched rows are deleted; unmatched deletes are
+      no-ops (merge.sql:428-436);
+    - ``cfg.update_only_op_u`` → only ``__op='u'`` updates matched rows; a
+      matched 'c' leaves the target row untouched; inserts unaffected
+      (step-6:431-451);
+    - ``cfg.strict_ts_guard`` → updates additionally require
+      ``source.source_ts_ns_order >= target.source_ts_ns_order`` (null
+      source ts passes); deletes are unconditional;
+    - the returned stats dict reports the candidate counts
+      ``records_inserted`` / ``records_deleted`` and, when ``__load_ts`` is
+      present, the processed window ``cdc_start_ts`` / ``cdc_end_ts``
+      (merge.sql:360-366 — counts feed the audit row, the window feeds the
+      watermark);
+    - ``pending_commit()`` is None on a cleanly-committed target and the
+      commit manifest after a crash mid-swap.
     """
 
     def __init__(self, spark: SparkSession, path: str, cfg: MergeConfig, schema: T.StructType):
@@ -195,11 +216,6 @@ class ParquetMergeTarget(MergeTarget):
         bad = [c for c in cfg.clustering_fields if c not in names]
         if bad:
             raise ValueError(f"clustering_fields {bad} are not target columns")
-        #: wall-clock seconds per merge phase of the LAST merge() call:
-        #: changes = scan+dedup+cast+stats agg (the eager cache job),
-        #: resolve_write = outer-join resolve + staging parquet write,
-        #: swap = bucket directory swaps. Diagnostic only.
-        self.phase_times: dict[str, float] = {}
         #: test/ops seam: called after the staged write, before the
         #: version check + swap (e.g. to snapshot, or — in the contract
         #: suite — to interleave a conflicting writer deterministically).
@@ -389,7 +405,6 @@ class ParquetMergeTarget(MergeTarget):
 
         s = changes.withColumn(BUCKET_COL, bucket_expr(pk, n))
         s.cache()
-        self.phase_times = {}
         try:
             stats, affected = self._batch_stats(s)
             if not affected:
@@ -421,7 +436,6 @@ class ParquetMergeTarget(MergeTarget):
         affected buckets + window stats (merge.sql:360-366 computes all
         stats from the same view). Shared by every sink built on this
         class (K1-K4 merge, SCD2 history)."""
-        t0 = time.time()
         aggs = [
             F.count(F.when(F.col("__op") != "d", 1)).alias("ins"),
             F.count(F.when(F.col("__op") == "d", 1)).alias("del"),
@@ -434,7 +448,6 @@ class ParquetMergeTarget(MergeTarget):
                 F.min("__load_ts").alias("min_lt"),
             ]
         counts = s.agg(*aggs).first()
-        self.phase_times["changes"] = round(time.time() - t0, 3)
         affected = sorted(counts["buckets"] or [])
         stats = {"records_inserted": counts["ins"], "records_deleted": counts["del"]}
         if has_load_ts:
@@ -486,8 +499,8 @@ class ParquetMergeTarget(MergeTarget):
         either the old or the new bucket. A commit manifest (staging id +
         affected buckets) is written before the first swap and removed after
         the last, so a mid-swap crash is detectable (``pending_commit``) and
-        replayable — Delta's atomic log commit replaces this whole dance on
-        a real deployment.
+        replayable (the snapshot sink publishes through one manifest link
+        instead).
 
         A pending transactional-audit payload fails loudly here: the
         per-bucket swap has no single publish to attach it to (use the
@@ -529,7 +542,6 @@ class ParquetMergeTarget(MergeTarget):
             merged = merged.sortWithinPartitions(
                 *part_cols, *[F.col(c) for c in self.cfg.clustering_fields]
             )
-        t0 = time.time()
         try:
             merged.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
         except BaseException:
@@ -537,8 +549,6 @@ class ParquetMergeTarget(MergeTarget):
             # tree — reclaim it now instead of waiting for vacuum()
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        self.phase_times["resolve_write"] = round(time.time() - t0, 3)
-        t0 = time.time()
         try:
             if self.pre_commit_hook is not None:
                 self.pre_commit_hook()
@@ -564,7 +574,6 @@ class ParquetMergeTarget(MergeTarget):
             os.remove(manifest)  # swap complete — commit is clean
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-            self.phase_times["swap"] = round(time.time() - t0, 3)
 
     # -- maintenance ---------------------------------------------------------
 

@@ -190,7 +190,7 @@ class Scd2Target(ParquetMergeTarget):
     pruned reads, staged atomic commits, crash manifests, optimistic
     version check, compact()/vacuum(), schema drift policies — and
     replaces the Type-1 resolve with the Type-2 close-and-append. The
-    change-set contract differs from :class:`MergeTarget` in one way:
+    change-set contract differs from :class:`ParquetMergeTarget` in one way:
     batches are NOT deduped (every event is a version) and must be
     in-order per key (see module docstring). The Type-1 gate flags make
     no sense here and are refused at construction."""
@@ -240,7 +240,6 @@ class Scd2Target(ParquetMergeTarget):
         v0 = self._read_version()
         s = changes.withColumn(BUCKET_COL, bucket_expr(pk, n))
         s.cache()
-        self.phase_times = {}
         try:
             stats, affected = self._batch_stats(s)
             if not affected:

@@ -71,8 +71,8 @@ def detect_payload_drift(
 
 def apply_drift_policy(windowed: DataFrame, target, cfg: MergeConfig) -> list[str]:
     """Detect drift in the batch and apply ``cfg.schema_drift_policy`` to
-    ``target`` (a MergeTarget). Returns the list of evolved column names
-    (empty when nothing drifted or policy is 'ignore').
+    ``target`` (a ParquetMergeTarget sink). Returns the list of evolved
+    column names (empty when nothing drifted or policy is 'ignore').
 
     'ignore' short-circuits without scanning — the default costs nothing.
     """

@@ -49,7 +49,7 @@ added later) are conservatively kept.
 The merge semantics are entirely inherited from ParquetMergeTarget
 (same resolve, same stats, same schema enforcement/drift/evolution) —
 only ``_commit``/``read`` and the version bookkeeping change; the shared
-contract suite runs against this class as a third implementation.
+contract suite runs against this class too.
 """
 
 from __future__ import annotations
@@ -57,7 +57,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame
@@ -246,7 +245,7 @@ class SnapshotMergeTarget(ParquetMergeTarget):
         return out
 
     def branch_ref(self, name: str) -> "SnapshotMergeTarget":
-        """A MergeTarget whose commits/reads resolve the branch's log."""
+        """A merge sink whose commits/reads resolve the branch's log."""
         import copy as _copy
 
         if self._branch_name is not None:
@@ -255,7 +254,6 @@ class SnapshotMergeTarget(ParquetMergeTarget):
             raise ValueError(f"branch {name!r} does not exist on {self.path}")
         clone = _copy.copy(self)
         clone._branch_name = name
-        clone.phase_times = {}
         clone._txn_payload = None
         return clone
 
@@ -586,7 +584,6 @@ class SnapshotMergeTarget(ParquetMergeTarget):
             merged = merged.sortWithinPartitions(
                 *part_cols, *[F.col(c) for c in self.cfg.clustering_fields]
             )
-        t0 = time.time()
         try:
             merged.write.mode("errorifexists").partitionBy(*part_cols).parquet(staging)
         except BaseException:
@@ -594,8 +591,6 @@ class SnapshotMergeTarget(ParquetMergeTarget):
             # tree — reclaim it now instead of waiting for vacuum()
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        self.phase_times["resolve_write"] = round(time.time() - t0, 3)
-        t0 = time.time()
         try:
             if self.pre_commit_hook is not None:
                 self.pre_commit_hook()
@@ -659,7 +654,6 @@ class SnapshotMergeTarget(ParquetMergeTarget):
                 # coordinator's finalize/abort/recover to resolve)
                 shutil.rmtree(staging, ignore_errors=True)
             raise
-        self.phase_times["swap"] = round(time.time() - t0, 3)
 
     #: opt-in content fingerprints for scan-free reconciliation
     #: (operators/reconcile.reconcile_snapshots): when True, every commit

@@ -1900,7 +1900,7 @@ SQL_CDC_TAGGED_READ = SQL_CDC_TIME_TRAVEL_READ
 
 def q_cdc_merge_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-audit-publish (operators/dq.expectations_guard on the
-    MergeTarget.validate_staged seam): the resolved post-merge state is
+    ParquetMergeTarget.validate_staged seam): the resolved post-merge state is
     validated BEFORE anything commits. Batch 2 carries a poison row
     (value outside the declared range) — the merge is REFUSED, the
     engine records the FAILED audit row, and the target provably stays

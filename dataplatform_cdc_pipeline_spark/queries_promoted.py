@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark import bench_phases
-from dataplatform_cdc_pipeline_spark.sources.tables import load_table, spread_scan
+from dataplatform_cdc_pipeline_spark.sources.tables import load_table
 
 _SPLIT = "2024-01-15 00:00:00"
 _ROW_SCHEMA = "tbl string, key string, val long"

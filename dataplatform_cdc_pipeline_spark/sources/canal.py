@@ -32,9 +32,21 @@ that Canal itself splits statements into multiple envelopes; the adapter
 fails loudly (ANSI arithmetic stays exact, and the guard column raises on
 violation) rather than silently colliding positions.
 
-Everything is native Columns (one ``from_json`` of the array + scalar
-``get_json_object`` probes, one generator ``posexplode``) — scan-speed,
-no Python in the path.
+Everything is native Columns — ONE ``from_json`` of the whole envelope
+under a fixed schema (scalars and the ``data`` array together, no
+``get_json_object`` probes), then one generator ``posexplode`` —
+scan-speed, no Python in the path.
+
+Strict-typing contract: the parse is PERMISSIVE and the envelope must
+match the schema's types. JSON that does not parse at all yields a NULL
+struct, so the row fails the op gate. A parseable envelope with one
+mistyped field keeps its other fields and reads that field as NULL
+(Spark's ``spark.sql.json.enablePartialResults``, on by default in
+Spark 4; with it off the whole struct is NULL and the row fails the op
+gate too): a string ``isDdl`` reads as not-DDL, a quoted ``es`` leaves
+``__ts_ns`` and the default ``load_ts`` NULL (the window scan's
+``load_ts`` range then skips the row), a non-array ``data`` fails the
+rows gate. None of these rows is quarantined or counted yet.
 """
 
 from __future__ import annotations

@@ -21,8 +21,19 @@ Differences from Debezium the adapter must absorb:
   falls to the ``pos`` tiebreak (``xid``) far more often than with
   Debezium's millis. The synthesized oracle pins this deliberately.
 
-Everything is native Columns (one ``from_json`` + scalar
-``get_json_object`` probes) — scan-speed, no Python in the path.
+Everything is native Columns (ONE ``from_json`` of the whole envelope,
+no ``get_json_object`` probes) — scan-speed, no Python in the path.
+
+Strict-typing contract: the parse is PERMISSIVE and the envelope must
+match the schema's types. JSON that does not parse at all yields a NULL
+struct, so the row fails the op gate. A parseable envelope with one
+mistyped field keeps its other fields and reads that field as NULL
+(Spark's ``spark.sql.json.enablePartialResults``, on by default in
+Spark 4; with it off the whole struct is NULL and the row fails the op
+gate too): a quoted ``ts`` leaves ``__ts_ns`` and the default
+``load_ts`` NULL (the window scan's ``load_ts`` range then skips the
+row), a non-object ``data`` leaves the bronze payload NULL. None of
+these rows is quarantined or counted yet.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
-"""Deletion-vector sink specifics (operators/dv_target.py) — the merge
-CONTRACT is covered by test_merge_target_contract.py (the suite runs
-against DvMergeTarget too); this file pins what makes DV mode DV mode:
+"""Deletion-vector sink specifics (operators/dv_target.py) — the K1-K4
+merge contract is covered by test_merge_target_contract.py, which runs
+against every sink and layout, DvMergeTarget included; this file pins what makes DV mode DV mode:
 delete-only batches touch no data file, tombstones fold on rewrite,
 re-inserts clear their mask, compact survives re-bucketing, and the
 crash window reconverges on replay."""
