@@ -8,6 +8,7 @@ against a DuckDB oracle at sf0.01.
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -150,10 +151,9 @@ _PRIORITY = [
     "events_distinct_stats", "props_stats", "order_priority_check",
     "small_quantity_revenue",
     # ---- r12 promotions (registry 245 -> 248; r11 verdict task 3): the
-    # table-maintenance/erasure trio, staged + oracle-gated at two scale
-    # factors through r11 (queries_promoted_r12.py), never
-    # driver-verified yet — they lead the r13 window as its
-    # never-verified head.
+    # table-maintenance/erasure trio, oracle-gated at two scale factors
+    # through r11, never driver-verified yet — they lead the r13 window
+    # as its never-verified head.
     "cdc_compact_binpack", "stream_compact_runs", "bm25_index_erasure",
 ]
 
@@ -167,63 +167,32 @@ def _ordered(merged: dict) -> dict:
     return out
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from dataplatform_cdc_pipeline_spark.queries import QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_analytic import ANALYTIC_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_curation import CURATION_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_ext import EXT_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_extra import EXTRA_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_llm import LLM_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_prep import PREP_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_promoted import PROMOTED_QUERIES
-    from dataplatform_cdc_pipeline_spark.queries_promoted_r11 import (
-        PROMOTED_R11_QUERIES,
-    )
-    from dataplatform_cdc_pipeline_spark.queries_promoted_r12 import (
-        PROMOTED_R12_QUERIES,
-    )
+#: Query modules in merge order; each declares one ``REGISTRY = {q_fn:
+#: oracle_sql}`` table, and a query's name is its function's name minus
+#: the ``q_`` prefix.
+_MODULES = (
+    "queries",
+    "queries_llm",
+    "queries_curation",
+    "queries_analytic",
+    "queries_ext",
+    "queries_extra",
+    "queries_prep",
+)
 
-    return _ordered(
-        {
-            **QUERIES,
-            **LLM_QUERIES,
-            **CURATION_QUERIES,
-            **ANALYTIC_QUERIES,
-            **EXT_QUERIES,
-            **EXTRA_QUERIES,
-            **PREP_QUERIES,
-            **PROMOTED_QUERIES,
-            **PROMOTED_R11_QUERIES,
-            **PROMOTED_R12_QUERIES,
-        }
-    )
+
+def _registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
+    merged = {}
+    for mod in _MODULES:
+        module = importlib.import_module(f"dataplatform_cdc_pipeline_spark.{mod}")
+        for fn, sql in module.REGISTRY.items():
+            merged[fn.__name__.removeprefix("q_")] = (fn, sql)
+    return _ordered(merged)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, (fn, _) in _registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from dataplatform_cdc_pipeline_spark.queries import ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_analytic import ANALYTIC_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_curation import CURATION_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_ext import EXT_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_extra import EXTRA_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_llm import LLM_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_prep import PREP_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_promoted import PROMOTED_ORACLES
-    from dataplatform_cdc_pipeline_spark.queries_promoted_r11 import (
-        PROMOTED_R11_ORACLES,
-    )
-    from dataplatform_cdc_pipeline_spark.queries_promoted_r12 import (
-        PROMOTED_R12_ORACLES,
-    )
-
-    return {
-        **ORACLES,
-        **LLM_ORACLES,
-        **CURATION_ORACLES,
-        **ANALYTIC_ORACLES,
-        **EXT_ORACLES,
-        **EXTRA_ORACLES,
-        **PREP_ORACLES,
-        **PROMOTED_ORACLES,
-        **PROMOTED_R11_ORACLES,
-        **PROMOTED_R12_ORACLES,
-    }
+    return {name: sql for name, (_, sql) in _registry().items()}

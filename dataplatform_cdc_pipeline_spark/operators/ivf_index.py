@@ -67,27 +67,16 @@ class IncrementalIvfIndex:
     """IVF,SQ8 index persisted at ``path`` (``centroids/``, ``scales/``,
     ``rows/`` partitioned by batch and cell)."""
 
-    #: class-level memo defaults so __new__-constructed handles (the
-    #: tie-break unit test builds one) read as "not yet cached"
-    _centroid_rows: list | None = None
-    _scales: list[int] | None = None
-
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
         self.centroids_path = os.path.join(path, "centroids")
         self.scales_path = os.path.join(path, "scales")
         self.rows_path = os.path.join(path, "rows")
-        #: session-local memo of the FROZEN artifacts (r13, guide §1.2):
-        #: centroids/scales are written once by bootstrap (re-bootstrap
-        #: fails loudly) and only replaced by refit()'s directory swap,
-        #: which resets the memo — so every add_batch/assign/search in a
-        #: lifecycle no longer pays a collect job per call to re-read an
-        #: immutable k-row artifact. Not cross-run state: the memo lives
-        #: on the index handle and is repopulated from the parquet
-        #: artifacts on first use.
-        self._centroid_rows: list | None = None
-        self._scales: list[int] | None = None
+        #: memo of the FROZEN centroids/scales, so add_batch/assign/search
+        #: do not pay a collect job per call to re-read a k-row artifact
+        #: (see :meth:`_frozen`)
+        self._memo: dict[str, tuple[tuple[int, int], list]] = {}
 
     # -- frozen artifacts ----------------------------------------------------
 
@@ -170,11 +159,28 @@ class IncrementalIvfIndex:
         return self.spark.read.parquet(self.centroids_path)
 
     def scales(self) -> list[int]:
-        if self._scales is None:
-            self._scales = scales_from_rows(
+        return self._frozen(
+            "scales",
+            lambda: scales_from_rows(
                 self.spark.read.parquet(self.scales_path).collect()
-            )
-        return self._scales
+            ),
+        )
+
+    def _frozen(self, name: str, load) -> list:
+        """Memoized frozen artifact ``name``, re-read with ``load`` when
+        the centroids directory's ``(st_ino, st_mtime_ns)`` differs from
+        the key it was read under. Bootstrap writes the artifacts once and
+        refit() renames a freshly built index into place, so a refit
+        through ANY handle on the path changes the key."""
+        try:
+            st = os.stat(self.centroids_path)
+        except FileNotFoundError:
+            raise ValueError(f"index at {self.path} is not bootstrapped") from None
+        key = (st.st_ino, st.st_mtime_ns)
+        hit = self._memo.get(name)
+        if hit is None or hit[0] != key:
+            hit = self._memo[name] = (key, load())
+        return hit[1]
 
     # -- assignment (shared by add and the from-scratch comparator) --------
 
@@ -193,11 +199,10 @@ class IncrementalIvfIndex:
         (Spark's total order ranks NaN above all and nulls below all,
         matching the window's NaN-first/nulls-last desc), and the negated
         cell id breaks exact ties toward the LOWEST cell."""
-        if self._centroid_rows is None:
-            self._centroid_rows = sorted(
-                self.centroids().collect(), key=lambda r: r["cell"]
-            )
-        rows = self._centroid_rows
+        rows = self._frozen(
+            "centroids",
+            lambda: sorted(self.centroids().collect(), key=lambda r: r["cell"]),
+        )
         entries = [
             F.struct(
                 (
@@ -521,10 +526,6 @@ class IncrementalIvfIndex:
             os.rename(self.path, old)
             swap_orphans.append(old)
         os.rename(staged, self.path)
-        # the swap replaced the frozen artifacts — drop the memo so the
-        # next assign/encode re-reads the NEW centroids/scales
-        self._centroid_rows = None
-        self._scales = None
         for orphan in swap_orphans:
             shutil.rmtree(orphan, ignore_errors=True)
 

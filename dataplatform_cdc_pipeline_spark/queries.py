@@ -1349,6 +1349,248 @@ def q_cdc_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_CDC_MERGE_DV = SQL_CDC_MERGE_INCREMENTAL
 
 
+_ROW_SCHEMA = "tbl string, key string, val long"
+FOLD_DEL_MOD = 7  # post-fold delete batch: survivors with user_id % 7 == 0
+
+
+def q_dv_fold_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The merge-on-read fold lifecycle whose read-tax economics
+    scripts/dv_read_bench.py measured (SCALE.md "DV mask read tax"),
+    semantics now hash-gated end to end: one full-window merge leaves
+    the final-op-'d' keys as TOMBSTONES (``mask_before_fold`` row counts
+    them); the masked read and the post-``compact()`` folded read must
+    produce identical row sets (both returned, both oracle-recomputed);
+    the fold clears every tombstone (``mask_after_fold`` = 0) and
+    reports the surviving row count (``rows_folded``); a subsequent
+    delete batch over ``auto_fold_max = 0`` must trigger the
+    fold-on-threshold path inside ``merge`` itself (``mask_after_autofold``
+    = 0, final state short the deleted keys). A mask that leaked through
+    a read, survived a fold, or missed the auto-fold threshold diverges
+    the hash."""
+    from dataplatform_cdc_pipeline_spark.engine import run_merge
+    from dataplatform_cdc_pipeline_spark.operators.dv_target import DvMergeTarget
+    from dataplatform_cdc_pipeline_spark.operators.watermark import WatermarkStore
+    from dataplatform_cdc_pipeline_spark.sources.cdc import (
+        USER_STATE_SCHEMA,
+        user_state_config,
+    )
+
+    raw = cdc_feed(spark, sf_dir)
+    cfg = user_state_config()
+    tmp = tempfile.mkdtemp(prefix="dv_fold_q_")
+    target = DvMergeTarget(spark, f"{tmp}/t", cfg, USER_STATE_SCHEMA)
+    audit = WatermarkStore(spark, f"{tmp}/a")
+    run_merge(
+        spark, cfg, target, audit, raw=raw, window=(None, None),
+        deterministic_audit=True,
+    )
+    bench_phases.mark("merge")
+
+    def state_rows(tag: str) -> DataFrame:
+        return target.read().select(
+            F.lit(tag).alias("tbl"),
+            F.col("user_id").cast("string").alias("key"),
+            F.floor(F.col("value") * F.lit(1_000_000.0)).cast("long").alias("val"),
+        )
+
+    mask_before = target.mask_size()
+    masked = state_rows("masked").localCheckpoint(eager=True)
+    bench_phases.mark("masked_read")
+    rows_folded = target.compact()
+    bench_phases.mark("fold")
+    mask_after = target.mask_size()
+    folded = state_rows("folded").localCheckpoint(eager=True)
+    bench_phases.mark("folded_read")
+
+    # delete batch over a zero threshold: merge() itself must fold
+    target.auto_fold_max = 0
+    dels = (
+        target.read()
+        .filter(F.col("user_id") % FOLD_DEL_MOD == 0)
+        .select(
+            "user_id",
+            "event_type",
+            "value",
+            "k",
+            F.lit(None).cast("timestamp").alias("source_ts_ns_order"),
+            F.col("user_id").cast("long").alias("pos"),
+            F.lit("d").alias("__op"),
+        )
+    )
+    target.merge(dels)
+    bench_phases.mark("autofold_merge")
+    mask_autofold = target.mask_size()
+    final = state_rows("after_autofold")
+    counters = spark.createDataFrame(
+        [
+            ("mask_before_fold", "n", mask_before),
+            ("mask_after_fold", "n", mask_after),
+            ("rows_folded", "n", rows_folded),
+            ("mask_after_autofold", "n", mask_autofold),
+        ],
+        _ROW_SCHEMA,
+    )
+    return (
+        masked.unionByName(folded).unionByName(final).unionByName(counters)
+    )
+
+
+SQL_DV_FOLD_CROSSOVER = f"""
+WITH ranked AS (
+  SELECT user_id,
+         CASE WHEN event_type = 'error' THEN 'd'
+              WHEN event_type = 'signup' THEN 'c' ELSE 'u' END AS op,
+         value,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts::TIMESTAMP) DESC,
+                                     event_id DESC) AS rn
+  FROM events),
+survivors AS (
+  SELECT user_id, floor(value * 1000000.0)::BIGINT AS val
+  FROM ranked WHERE rn = 1 AND op != 'd'),
+tombstoned AS (SELECT user_id FROM ranked WHERE rn = 1 AND op = 'd')
+SELECT 'masked' AS tbl, user_id::VARCHAR AS key, val FROM survivors
+UNION ALL
+SELECT 'folded', user_id::VARCHAR, val FROM survivors
+UNION ALL
+SELECT 'after_autofold', user_id::VARCHAR, val
+FROM survivors WHERE user_id % {FOLD_DEL_MOD} != 0
+UNION ALL
+SELECT 'mask_before_fold', 'n', count(*)::BIGINT FROM tombstoned
+UNION ALL
+SELECT 'mask_after_fold', 'n', 0::BIGINT
+UNION ALL
+SELECT 'rows_folded', 'n', count(*)::BIGINT FROM survivors
+UNION ALL
+SELECT 'mask_after_autofold', 'n', 0::BIGINT
+ORDER BY tbl, key
+"""
+
+
+_N_FILES = 16  # staged small files for the bin-pack query
+_N_BINS = 5  # target bins: target_rows = ceil(n / _N_BINS)
+
+
+def _stage_group_files(df: DataFrame, n: int, key: str, dest: str) -> None:
+    """One parquet file per key%n group, deterministically named so
+    file-name order == group order (g00.parquet … g15.parquet)."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+
+    stage_root = tempfile.mkdtemp(prefix="compact_stage_")
+    _os.makedirs(dest, exist_ok=True)
+    for g in range(n):
+        d = f"{stage_root}/stage_{g}"
+        df.filter(F.col(key) % n == g).coalesce(1).write.parquet(d)
+        part = _glob.glob(f"{d}/part-*.parquet")[0]
+        _shutil.move(part, f"{dest}/g{g:02d}.parquet")
+
+
+def q_cdc_compact_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bin-pack compaction lifecycle. Output rows
+    (phase, id, bin, n_rows, sum_key, rewrite):
+
+    - 'plan': one row per input file (id = its group g) — the bin the
+      sequential row-budget packing assigned and the rewrite decision
+    - 'post': per-bin row count + event_id sum read back from the
+      compacted layout — mis-packed data diverges here
+    - 'total': whole-table invariance (count + sum survive compaction)
+    """
+    from dataplatform_cdc_pipeline_spark.operators.compaction import compact
+
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    tmp = tempfile.mkdtemp(prefix="compact_q_")
+    src, dst = f"{tmp}/src", f"{tmp}/dst"
+    _stage_group_files(events, _N_FILES, "event_id", src)
+    n_total = spark.read.parquet(src).count()
+    target = -(-n_total // _N_BINS)  # ceil
+    bench_phases.mark("setup")
+
+    plan = compact(spark, src, dst, target)
+    bench_phases.mark("compact")
+
+    plan_rows = plan.select(
+        F.lit("plan").alias("phase"),
+        F.regexp_extract("file", r"g(\d+)\.parquet$", 1)
+        .cast("long")
+        .alias("id"),
+        "bin",
+        "n_rows",
+        F.lit(None).cast("long").alias("sum_key"),
+        F.col("rewrite").cast("int").alias("rewrite"),
+    )
+    compacted = spark.read.parquet(dst)
+    post = (
+        compacted.groupBy("bin")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("event_id").alias("sum_key"),
+        )
+        .select(
+            F.lit("post").alias("phase"),
+            F.lit(None).cast("long").alias("id"),
+            "bin", "n_rows", "sum_key",
+            F.lit(None).cast("int").alias("rewrite"),
+        )
+    )
+    total = compacted.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("event_id").alias("sum_key"),
+    ).select(
+        F.lit("total").alias("phase"),
+        F.lit(None).cast("long").alias("id"),
+        F.lit(None).cast("long").alias("bin"),
+        "n_rows", "sum_key",
+        F.lit(None).cast("int").alias("rewrite"),
+    )
+    return plan_rows.unionByName(post).unionByName(total)
+
+
+SQL_CDC_COMPACT_BINPACK = f"""
+WITH per_g AS (
+  -- sums cast to BIGINT: DuckDB sum(BIGINT) is HUGEINT, which pandas
+  -- renders float64 and the driver's value hash would diverge from
+  -- Spark's int64 (caught by check_parity before the r12 promotion)
+  SELECT event_id % {_N_FILES} AS g, count(*) AS n_rows,
+         CAST(sum(event_id) AS BIGINT) AS sum_id
+  FROM events GROUP BY 1
+),
+tot AS (
+  SELECT CAST(ceil(count(*) / {_N_BINS}.0) AS BIGINT) AS target FROM events
+),
+cum AS (
+  SELECT g, n_rows, sum_id,
+         COALESCE(SUM(n_rows) OVER (
+           ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+         ), 0) AS cb
+  FROM per_g
+),
+plan AS (
+  SELECT g, n_rows, sum_id, cb // tot.target AS bin, tot.target AS target
+  FROM cum, tot
+),
+per_bin AS (
+  SELECT bin, count(*) AS n_files,
+         CAST(sum(n_rows) AS BIGINT) AS bin_rows,
+         CAST(sum(sum_id) AS BIGINT) AS bin_sum, max(target) AS target
+  FROM plan GROUP BY bin
+)
+SELECT 'plan' AS phase, p.g AS id, p.bin, p.n_rows,
+       NULL::BIGINT AS sum_key,
+       CAST(b.n_files > 1 OR b.bin_rows < b.target AS INT) AS rewrite
+FROM plan p JOIN per_bin b USING (bin)
+UNION ALL
+SELECT 'post', NULL, bin, bin_rows, bin_sum, NULL::INT FROM per_bin
+UNION ALL
+SELECT 'total', NULL, NULL, count(*),
+       CAST(sum(event_id) AS BIGINT), NULL::INT
+FROM events
+"""
+
+
 def q_cdc_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel through the snapshot sink: after BOTH windows commit,
     ``read(version=1)`` must reproduce the phase-1 state exactly — the
@@ -2873,110 +3115,59 @@ SQL_SNAPSHOT_RECONCILE = SQL_TABLE_RECONCILE
 # registry
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, callable] = {
-    "cdc_window_scan": q_cdc_window_scan,
-    "cdc_dedup_latest": q_cdc_dedup_latest,
-    "cdc_dedup_latest_salted": q_cdc_dedup_latest_salted,
-    "cdc_cast_projection": q_cdc_cast_projection,
-    "cdc_delete_survivorship": q_cdc_delete_survivorship,
-    "cdc_merge_full": q_cdc_merge_full,
-    "cdc_merge_incremental": q_cdc_merge_incremental,
-    "cdc_merge_multi_pk": q_cdc_merge_multi_pk,
-    "cdc_merge_op_u": q_cdc_merge_op_u,
-    "cdc_merge_late_replay": q_cdc_merge_late_replay,
-    "cdc_merge_late_guarded": q_cdc_merge_late_guarded,
-    "cdc_merge_multi_pk_guarded": q_cdc_merge_multi_pk_guarded,
-    "cdc_rowkey_timestamp": q_cdc_rowkey_timestamp,
-    "cdc_watermark_stats": q_cdc_watermark_stats,
-    "cdc_bucket_pruned_read": q_cdc_bucket_pruned_read,
-    "cdc_date_partitioned_read": q_cdc_date_partitioned_read,
-    "cdc_ivm_type_counts": q_cdc_ivm_type_counts,
-    "cdc_ivm_sum": q_cdc_ivm_sum,
-    "cdc_ivm_minmax": q_cdc_ivm_minmax,
-    "cdc_schema_drift": q_cdc_schema_drift,
-    "cdc_job_log": q_cdc_job_log,
-    "cdc_debezium_ingest": q_cdc_debezium_ingest,
-    "cdc_maxwell_ingest": q_cdc_maxwell_ingest,
-    "cdc_canal_ingest": q_cdc_canal_ingest,
-    "cdc_change_feed": q_cdc_change_feed,
-    "cdc_txn_audit": q_cdc_txn_audit,
-    "cdc_tagged_read": q_cdc_tagged_read,
-    "cdc_merge_patch": q_cdc_merge_patch,
-    "cdc_merge_soft_delete": q_cdc_merge_soft_delete,
-    "cdc_retention_sweep": q_cdc_retention_sweep,
-    "cdc_metadata_count": q_cdc_metadata_count,
-    "cdc_merge_wap": q_cdc_merge_wap,
-    "cdc_snapshot_merge": q_cdc_snapshot_merge,
-    "cdc_merge_dv": q_cdc_merge_dv,
-    "cdc_time_travel_read": q_cdc_time_travel_read,
-    "cdc_branch_merge": q_cdc_branch_merge,
-    "cdc_clone_read": q_cdc_clone_read,
-    "cdc_erasure_txn": q_cdc_erasure_txn,
-    "cdc_table_history": q_cdc_table_history,
-    "cdc_snapshot_diff": q_cdc_snapshot_diff,
-    "cdc_zorder_read": q_cdc_zorder_read,
-    "cdc_scd2_history": q_cdc_scd2_history,
-    "cdc_scd2_asof": q_cdc_scd2_asof,
-    "cdc_skipping_read": q_cdc_skipping_read,
-    "cdc_range_export": q_cdc_range_export,
-    "events_scd2_join": q_events_scd2_join,
-    "table_reconcile": q_table_reconcile,
-    "snapshot_reconcile": q_snapshot_reconcile,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "top_orders_per_customer": q_top_orders_per_customer,
-}
 
-ORACLES: dict[str, str] = {
-    "cdc_window_scan": SQL_CDC_WINDOW_SCAN,
-    "cdc_dedup_latest": SQL_CDC_DEDUP_LATEST,
-    "cdc_dedup_latest_salted": SQL_CDC_DEDUP_LATEST,
-    "cdc_cast_projection": SQL_CDC_CAST_PROJECTION,
-    "cdc_delete_survivorship": SQL_CDC_DELETE_SURVIVORSHIP,
-    "cdc_merge_full": SQL_CDC_MERGE_FULL,
-    "cdc_merge_incremental": SQL_CDC_MERGE_INCREMENTAL,
-    "cdc_merge_multi_pk": SQL_CDC_MERGE_MULTI_PK,
-    "cdc_merge_op_u": SQL_CDC_MERGE_OP_U,
-    "cdc_merge_late_replay": SQL_CDC_MERGE_LATE_REPLAY,
-    "cdc_merge_late_guarded": SQL_CDC_MERGE_LATE_GUARDED,
-    "cdc_merge_multi_pk_guarded": SQL_CDC_MERGE_MULTI_PK_GUARDED,
-    "cdc_rowkey_timestamp": SQL_CDC_ROWKEY_TIMESTAMP,
-    "cdc_watermark_stats": SQL_CDC_WATERMARK_STATS,
-    "cdc_bucket_pruned_read": SQL_CDC_BUCKET_PRUNED_READ,
-    "cdc_date_partitioned_read": SQL_CDC_DATE_PARTITIONED_READ,
-    "cdc_ivm_type_counts": SQL_CDC_IVM_TYPE_COUNTS,
-    "cdc_ivm_sum": SQL_CDC_IVM_SUM,
-    "cdc_ivm_minmax": SQL_CDC_IVM_MINMAX,
-    "cdc_schema_drift": SQL_CDC_SCHEMA_DRIFT,
-    "cdc_job_log": SQL_CDC_JOB_LOG,
-    "cdc_debezium_ingest": SQL_CDC_DEBEZIUM_INGEST,
-    "cdc_maxwell_ingest": SQL_CDC_MAXWELL_INGEST,
-    "cdc_canal_ingest": SQL_CDC_CANAL_INGEST,
-    "cdc_change_feed": SQL_CDC_CHANGE_FEED,
-    "cdc_txn_audit": SQL_CDC_TXN_AUDIT,
-    "cdc_tagged_read": SQL_CDC_TAGGED_READ,
-    "cdc_merge_patch": SQL_CDC_MERGE_PATCH,
-    "cdc_merge_soft_delete": SQL_CDC_MERGE_SOFT_DELETE,
-    "cdc_retention_sweep": SQL_CDC_RETENTION_SWEEP,
-    "cdc_metadata_count": SQL_CDC_METADATA_COUNT,
-    "cdc_merge_wap": SQL_CDC_MERGE_WAP,
-    "cdc_snapshot_merge": SQL_CDC_SNAPSHOT_MERGE,
-    "cdc_merge_dv": SQL_CDC_MERGE_DV,
-    "cdc_time_travel_read": SQL_CDC_TIME_TRAVEL_READ,
-    "cdc_branch_merge": SQL_CDC_BRANCH_MERGE,
-    "cdc_clone_read": SQL_CDC_CLONE_READ,
-    "cdc_erasure_txn": SQL_CDC_ERASURE_TXN,
-    "cdc_table_history": SQL_CDC_TABLE_HISTORY,
-    "cdc_snapshot_diff": SQL_CDC_SNAPSHOT_DIFF,
-    "cdc_zorder_read": SQL_CDC_ZORDER_READ,
-    "cdc_scd2_history": SQL_CDC_SCD2_HISTORY,
-    "cdc_scd2_asof": SQL_CDC_SCD2_ASOF,
-    "cdc_skipping_read": SQL_CDC_SKIPPING_READ,
-    "cdc_range_export": SQL_CDC_RANGE_EXPORT,
-    "events_scd2_join": SQL_EVENTS_SCD2_JOIN,
-    "table_reconcile": SQL_TABLE_RECONCILE,
-    "snapshot_reconcile": SQL_SNAPSHOT_RECONCILE,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "revenue_by_nation": SQL_REVENUE_BY_NATION,
-    "top_orders_per_customer": SQL_TOP_ORDERS_PER_CUSTOMER,
+REGISTRY = {
+    q_cdc_window_scan: SQL_CDC_WINDOW_SCAN,
+    q_cdc_dedup_latest: SQL_CDC_DEDUP_LATEST,
+    q_cdc_dedup_latest_salted: SQL_CDC_DEDUP_LATEST,
+    q_cdc_cast_projection: SQL_CDC_CAST_PROJECTION,
+    q_cdc_delete_survivorship: SQL_CDC_DELETE_SURVIVORSHIP,
+    q_cdc_merge_full: SQL_CDC_MERGE_FULL,
+    q_cdc_merge_incremental: SQL_CDC_MERGE_INCREMENTAL,
+    q_cdc_merge_multi_pk: SQL_CDC_MERGE_MULTI_PK,
+    q_cdc_merge_op_u: SQL_CDC_MERGE_OP_U,
+    q_cdc_merge_late_replay: SQL_CDC_MERGE_LATE_REPLAY,
+    q_cdc_merge_late_guarded: SQL_CDC_MERGE_LATE_GUARDED,
+    q_cdc_merge_multi_pk_guarded: SQL_CDC_MERGE_MULTI_PK_GUARDED,
+    q_cdc_rowkey_timestamp: SQL_CDC_ROWKEY_TIMESTAMP,
+    q_cdc_watermark_stats: SQL_CDC_WATERMARK_STATS,
+    q_cdc_bucket_pruned_read: SQL_CDC_BUCKET_PRUNED_READ,
+    q_cdc_date_partitioned_read: SQL_CDC_DATE_PARTITIONED_READ,
+    q_cdc_ivm_type_counts: SQL_CDC_IVM_TYPE_COUNTS,
+    q_cdc_ivm_sum: SQL_CDC_IVM_SUM,
+    q_cdc_ivm_minmax: SQL_CDC_IVM_MINMAX,
+    q_cdc_schema_drift: SQL_CDC_SCHEMA_DRIFT,
+    q_cdc_job_log: SQL_CDC_JOB_LOG,
+    q_cdc_debezium_ingest: SQL_CDC_DEBEZIUM_INGEST,
+    q_cdc_maxwell_ingest: SQL_CDC_MAXWELL_INGEST,
+    q_cdc_canal_ingest: SQL_CDC_CANAL_INGEST,
+    q_cdc_change_feed: SQL_CDC_CHANGE_FEED,
+    q_cdc_txn_audit: SQL_CDC_TXN_AUDIT,
+    q_cdc_tagged_read: SQL_CDC_TAGGED_READ,
+    q_cdc_merge_patch: SQL_CDC_MERGE_PATCH,
+    q_cdc_merge_soft_delete: SQL_CDC_MERGE_SOFT_DELETE,
+    q_cdc_retention_sweep: SQL_CDC_RETENTION_SWEEP,
+    q_cdc_metadata_count: SQL_CDC_METADATA_COUNT,
+    q_cdc_merge_wap: SQL_CDC_MERGE_WAP,
+    q_cdc_snapshot_merge: SQL_CDC_SNAPSHOT_MERGE,
+    q_cdc_merge_dv: SQL_CDC_MERGE_DV,
+    q_dv_fold_crossover: SQL_DV_FOLD_CROSSOVER,
+    q_cdc_compact_binpack: SQL_CDC_COMPACT_BINPACK,
+    q_cdc_time_travel_read: SQL_CDC_TIME_TRAVEL_READ,
+    q_cdc_branch_merge: SQL_CDC_BRANCH_MERGE,
+    q_cdc_clone_read: SQL_CDC_CLONE_READ,
+    q_cdc_erasure_txn: SQL_CDC_ERASURE_TXN,
+    q_cdc_table_history: SQL_CDC_TABLE_HISTORY,
+    q_cdc_snapshot_diff: SQL_CDC_SNAPSHOT_DIFF,
+    q_cdc_zorder_read: SQL_CDC_ZORDER_READ,
+    q_cdc_scd2_history: SQL_CDC_SCD2_HISTORY,
+    q_cdc_scd2_asof: SQL_CDC_SCD2_ASOF,
+    q_cdc_skipping_read: SQL_CDC_SKIPPING_READ,
+    q_cdc_range_export: SQL_CDC_RANGE_EXPORT,
+    q_events_scd2_join: SQL_EVENTS_SCD2_JOIN,
+    q_table_reconcile: SQL_TABLE_RECONCILE,
+    q_snapshot_reconcile: SQL_SNAPSHOT_RECONCILE,
+    q_pricing_summary: SQL_PRICING_SUMMARY,
+    q_revenue_by_nation: SQL_REVENUE_BY_NATION,
+    q_top_orders_per_customer: SQL_TOP_ORDERS_PER_CUSTOMER,
 }

@@ -1059,52 +1059,28 @@ FROM lineitem
 # registry
 # ---------------------------------------------------------------------------
 
-ANALYTIC_QUERIES = {
-    "shipping_priority_mix": q_shipping_priority_mix,
-    "promo_revenue": q_promo_revenue,
-    "large_volume_customer": q_large_volume_customer,
-    "discounted_revenue": q_discounted_revenue,
-    "sales_opportunity": q_sales_opportunity,
-    "top_supplier": q_top_supplier,
-    "min_cost_supplier": q_min_cost_supplier,
-    "market_share": q_market_share,
-    "customer_value_deciles": q_customer_value_deciles,
-    "customer_pareto": q_customer_pareto,
-    "dq_expectations": q_dq_expectations,
-    "volume_shipping": q_volume_shipping,
-    "product_type_profit": q_product_type_profit,
-    "returned_item_report": q_returned_item_report,
-    "customer_order_histogram": q_customer_order_histogram,
-    "supplier_part_variety": q_supplier_part_variety,
-    "exclusive_open_supplier": q_exclusive_open_supplier,
-    "part_skyline": q_part_skyline,
-    "unshipped_priority": q_unshipped_priority,
-    "forecast_revenue": q_forecast_revenue,
-    "important_parts": q_important_parts,
-    "order_window_suite": q_order_window_suite,
-}
 
-ANALYTIC_ORACLES = {
-    "shipping_priority_mix": SQL_SHIPPING_PRIORITY_MIX,
-    "promo_revenue": SQL_PROMO_REVENUE,
-    "large_volume_customer": SQL_LARGE_VOLUME_CUSTOMER,
-    "discounted_revenue": SQL_DISCOUNTED_REVENUE,
-    "sales_opportunity": SQL_SALES_OPPORTUNITY,
-    "top_supplier": SQL_TOP_SUPPLIER,
-    "min_cost_supplier": SQL_MIN_COST_SUPPLIER,
-    "market_share": SQL_MARKET_SHARE,
-    "customer_value_deciles": SQL_CUSTOMER_VALUE_DECILES,
-    "customer_pareto": SQL_CUSTOMER_PARETO,
-    "dq_expectations": SQL_DQ_EXPECTATIONS,
-    "volume_shipping": SQL_VOLUME_SHIPPING,
-    "product_type_profit": SQL_PRODUCT_TYPE_PROFIT,
-    "returned_item_report": SQL_RETURNED_ITEM_REPORT,
-    "customer_order_histogram": SQL_CUSTOMER_ORDER_HISTOGRAM,
-    "supplier_part_variety": SQL_SUPPLIER_PART_VARIETY,
-    "exclusive_open_supplier": SQL_EXCLUSIVE_OPEN_SUPPLIER,
-    "part_skyline": SQL_PART_SKYLINE,
-    "unshipped_priority": SQL_UNSHIPPED_PRIORITY,
-    "forecast_revenue": SQL_FORECAST_REVENUE,
-    "important_parts": SQL_IMPORTANT_PARTS,
-    "order_window_suite": SQL_ORDER_WINDOW_SUITE,
+REGISTRY = {
+    q_shipping_priority_mix: SQL_SHIPPING_PRIORITY_MIX,
+    q_promo_revenue: SQL_PROMO_REVENUE,
+    q_large_volume_customer: SQL_LARGE_VOLUME_CUSTOMER,
+    q_discounted_revenue: SQL_DISCOUNTED_REVENUE,
+    q_sales_opportunity: SQL_SALES_OPPORTUNITY,
+    q_top_supplier: SQL_TOP_SUPPLIER,
+    q_min_cost_supplier: SQL_MIN_COST_SUPPLIER,
+    q_market_share: SQL_MARKET_SHARE,
+    q_customer_value_deciles: SQL_CUSTOMER_VALUE_DECILES,
+    q_customer_pareto: SQL_CUSTOMER_PARETO,
+    q_dq_expectations: SQL_DQ_EXPECTATIONS,
+    q_volume_shipping: SQL_VOLUME_SHIPPING,
+    q_product_type_profit: SQL_PRODUCT_TYPE_PROFIT,
+    q_returned_item_report: SQL_RETURNED_ITEM_REPORT,
+    q_customer_order_histogram: SQL_CUSTOMER_ORDER_HISTOGRAM,
+    q_supplier_part_variety: SQL_SUPPLIER_PART_VARIETY,
+    q_exclusive_open_supplier: SQL_EXCLUSIVE_OPEN_SUPPLIER,
+    q_part_skyline: SQL_PART_SKYLINE,
+    q_unshipped_priority: SQL_UNSHIPPED_PRIORITY,
+    q_forecast_revenue: SQL_FORECAST_REVENUE,
+    q_important_parts: SQL_IMPORTANT_PARTS,
+    q_order_window_suite: SQL_ORDER_WINDOW_SUITE,
 }

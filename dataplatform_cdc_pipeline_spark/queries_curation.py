@@ -326,26 +326,15 @@ SELECT doc_id, len_dirty, length(norm) AS len_norm, md5(norm) AS norm_md5
 FROM n
 """
 
-CURATION_QUERIES = {
-    "text_normalize": q_text_normalize,
-    "pii_redaction": q_pii_redaction,
-    "quality_funnel": q_quality_funnel,
-    "corpus_split": q_corpus_split,
-    "domain_mix_plan": q_domain_mix_plan,
-    "domain_mix_apply": q_domain_mix_apply,
-    "ngram_top_bigrams": q_ngram_top_bigrams,
-    "vocab_df_stats": q_vocab_df_stats,
-    "cross_corpus_dedup": q_cross_corpus_dedup,
-}
 
-CURATION_ORACLES = {
-    "text_normalize": SQL_TEXT_NORMALIZE,
-    "pii_redaction": SQL_PII_REDACTION,
-    "quality_funnel": SQL_QUALITY_FUNNEL,
-    "corpus_split": SQL_CORPUS_SPLIT,
-    "domain_mix_plan": SQL_DOMAIN_MIX_PLAN,
-    "domain_mix_apply": SQL_DOMAIN_MIX_APPLY,
-    "ngram_top_bigrams": SQL_NGRAM_TOP_BIGRAMS,
-    "vocab_df_stats": SQL_VOCAB_DF_STATS,
-    "cross_corpus_dedup": SQL_CROSS_CORPUS_DEDUP,
+REGISTRY = {
+    q_text_normalize: SQL_TEXT_NORMALIZE,
+    q_pii_redaction: SQL_PII_REDACTION,
+    q_quality_funnel: SQL_QUALITY_FUNNEL,
+    q_corpus_split: SQL_CORPUS_SPLIT,
+    q_domain_mix_plan: SQL_DOMAIN_MIX_PLAN,
+    q_domain_mix_apply: SQL_DOMAIN_MIX_APPLY,
+    q_ngram_top_bigrams: SQL_NGRAM_TOP_BIGRAMS,
+    q_vocab_df_stats: SQL_VOCAB_DF_STATS,
+    q_cross_corpus_dedup: SQL_CROSS_CORPUS_DEDUP,
 }

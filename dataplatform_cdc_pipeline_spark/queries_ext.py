@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark import bench_phases
+from dataplatform_cdc_pipeline_spark.queries import (
+    SQL_CDC_MERGE_FULL,
+    SQL_CDC_SCD2_HISTORY,
+    SQL_EVENTS_SCD2_JOIN,
+)
 from dataplatform_cdc_pipeline_spark.sources.tables import load_table, spread_scan
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
@@ -1822,6 +1827,110 @@ WHERE rk <= 3
 """
 
 
+_N_BATCHES = 5
+_EVERY = 2
+_BINS_PER_RUN = 3
+
+
+def q_stream_compact_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming landing + run consolidation
+    (streaming/compaction_stream.py): five micro-batches
+    (event_id % 5 = 0..4, mtime order), runs r0/r1 consolidate batch
+    pairs, b4 stays as the landing tail. Output = run_stats plus the
+    whole-view invariance row (runs + tail == source, count and key
+    sum/range exact)."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+
+    from dataplatform_cdc_pipeline_spark.streaming.compaction_stream import (
+        run_stats,
+        stream_compact_runs,
+    )
+
+    events = load_table(spark, sf_dir, "events").select("event_id", "value")
+    tmp = tempfile.mkdtemp(prefix="compact_stream_q_")
+    src = f"{tmp}/src"
+    _os.makedirs(src)
+    t0 = 1_000_000_000  # fixed mtimes: arrival order is the contract
+    for g in range(_N_BATCHES):
+        d = f"{tmp}/stage_{g}"
+        events.filter(F.col("event_id") % _N_BATCHES == g).coalesce(1).write.parquet(d)
+        part = _glob.glob(f"{d}/part-*.parquet")[0]
+        dest = f"{src}/batch_{g}.parquet"
+        _shutil.move(part, dest)
+        _os.utime(dest, (t0 + g * 100, t0 + g * 100))
+    bench_phases.mark("setup")
+
+    work = f"{tmp}/work"
+    stream_compact_runs(
+        spark, src, "event_id long, value double", work,
+        key="event_id", compact_every=_EVERY, bins_per_run=_BINS_PER_RUN,
+    )
+    bench_phases.mark("drain")
+
+    stats = run_stats(
+        spark, work, "event_id", "event_id long, value double",
+        n_batches=_N_BATCHES, compact_every=_EVERY,
+    )
+    live = spark.read.parquet(f"{work}/runs").select("event_id").unionByName(
+        spark.read.parquet(f"{work}/landing")
+        .filter(F.expr("CAST(substring(batch, 2) AS BIGINT)") >= 4)
+        .select("event_id")
+    )
+    total = live.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("event_id").alias("sum_key"),
+        F.min("event_id").alias("min_key"),
+        F.max("event_id").alias("max_key"),
+    ).select(
+        F.lit("total").alias("phase"),
+        F.lit(None).cast("string").alias("id"),
+        F.lit(None).cast("long").alias("bin"),
+        "n_rows", "sum_key", "min_key", "max_key",
+    )
+    return stats.unionByName(total)
+
+
+def _run_sql(j: int) -> str:
+    """Relational re-derivation of run r<j>: the sorted batch-pair
+    delta packed into ceil(n/bins) row-budget bins."""
+    lo, hi = j * _EVERY, j * _EVERY + _EVERY - 1
+    return f"""
+SELECT 'run' AS phase, 'r{j}' AS id, bin, count(*) AS n_rows,
+       CAST(sum(event_id) AS BIGINT) AS sum_key, min(event_id) AS min_key,
+       max(event_id) AS max_key
+FROM (
+  WITH delta AS (
+    SELECT event_id FROM events
+    WHERE event_id % {_N_BATCHES} BETWEEN {lo} AND {hi}
+  ),
+  sized AS (SELECT CAST(ceil(count(*) / {_BINS_PER_RUN}.0) AS BIGINT) AS t
+            FROM delta)
+  SELECT event_id,
+         (ROW_NUMBER() OVER (ORDER BY event_id) - 1) // sized.t AS bin
+  FROM delta, sized
+)
+GROUP BY bin"""
+
+
+SQL_STREAM_COMPACT_RUNS = (
+    _run_sql(0)
+    + "\nUNION ALL"
+    + _run_sql(1)
+    + f"""
+UNION ALL
+SELECT 'tail', 'b4', NULL::BIGINT, count(*),
+       CAST(sum(event_id) AS BIGINT), min(event_id), max(event_id)
+FROM events WHERE event_id % {_N_BATCHES} = 4
+UNION ALL
+SELECT 'total', NULL::VARCHAR, NULL::BIGINT, count(*),
+       CAST(sum(event_id) AS BIGINT), min(event_id), max(event_id)
+FROM events
+"""
+)
+
+
 # ---------------------------------------------------------------------------
 # higher-order array function suite (lambda-expression contract)
 # ---------------------------------------------------------------------------
@@ -2206,7 +2315,6 @@ FROM documents
 # ---------------------------------------------------------------------------
 # cohort retention matrix (two-level distinct aggregation)
 # ---------------------------------------------------------------------------
-
 
 
 def q_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2838,64 +2946,6 @@ WHERE n >= {OUTLIER_MIN_N}
 # registry
 # ---------------------------------------------------------------------------
 
-EXT_QUERIES = {
-    "sessionize_events": q_sessionize_events,
-    "events_gapfill": q_events_gapfill,
-    "events_pagerank": q_events_pagerank,
-    "bloom_join_prune": q_bloom_join_prune,
-    "events_value_histogram": q_events_value_histogram,
-    "events_moving_avg": q_events_moving_avg,
-    "events_rollup": q_events_rollup,
-    "events_cube": q_events_cube,
-    "events_pivot": q_events_pivot,
-    "customer_set_ops": q_customer_set_ops,
-    "asof_prior_click": q_asof_prior_click,
-    "value_band_join": q_value_band_join,
-    "events_distinct_stats": q_events_distinct_stats,
-    "props_stats": q_props_stats,
-    "order_priority_check": q_order_priority_check,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "stream_windowed_counts": q_stream_windowed_counts,
-    "stream_session_windows": q_stream_session_windows,
-    "stream_click_attribution": q_stream_click_attribution,
-    "stream_dedup_events": q_stream_dedup_events,
-    "stream_merge_state": q_stream_merge_state,
-    "stream_dv_merge": q_stream_dv_merge,
-    "stream_scd2_history": q_stream_scd2_history,
-    "stream_ivm_totals": q_stream_ivm_totals,
-    "stream_user_totals": q_stream_user_totals,
-    "events_distinct_sketch": q_events_distinct_sketch,
-    "fuzzy_name_match": q_fuzzy_name_match,
-    "stream_distinct_sketch": q_stream_distinct_sketch,
-    "events_value_percentiles": q_events_value_percentiles,
-    "stream_debezium_merge": q_stream_debezium_merge,
-    "events_funnel": q_events_funnel,
-    "events_transitions": q_events_transitions,
-    "events_outliers": q_events_outliers,
-    "supplier_triangles": q_supplier_triangles,
-    "events_grouping_sets": q_events_grouping_sets,
-    "stream_scd2_enrich": q_stream_scd2_enrich,
-    "jsonl_documents_ingest": q_jsonl_documents_ingest,
-    "csv_documents_ingest": q_csv_documents_ingest,
-    "orc_events_ingest": q_orc_events_ingest,
-    "events_retention_cohorts": q_events_retention_cohorts,
-    "asof_next_error": q_asof_next_error,
-    "stream_txn_merge": q_stream_txn_merge,
-    "events_intervals_merged": q_events_intervals_merged,
-    "events_growth_accounting": q_events_growth_accounting,
-    "scalar_function_matrix": q_scalar_function_matrix,
-    "events_bag_set_ops": q_events_bag_set_ops,
-    "stream_late_data_drop": q_stream_late_data_drop,
-    "stream_outer_attribution": q_stream_outer_attribution,
-    "events_hll_check": q_events_hll_check,
-    "array_function_suite": q_array_function_suite,
-    "stream_topk_per_type": q_stream_topk_per_type,
-    "events_unpivot": q_events_unpivot,
-    "events_mad": q_events_mad,
-    "map_function_suite": q_map_function_suite,
-    "events_hourly_profile": q_events_hourly_profile,
-    "doc_global_ids": q_doc_global_ids,
-}
 
 SQL_STREAM_USER_TOTALS = """
 SELECT user_id,
@@ -2906,83 +2956,6 @@ FROM events
 GROUP BY user_id
 """
 
-EXT_ORACLES = {
-    "sessionize_events": SQL_SESSIONIZE_EVENTS,
-    "events_gapfill": SQL_EVENTS_GAPFILL,
-    "events_pagerank": SQL_EVENTS_PAGERANK,
-    "bloom_join_prune": SQL_BLOOM_JOIN_PRUNE,
-    "events_value_histogram": SQL_EVENTS_VALUE_HISTOGRAM,
-    "events_moving_avg": SQL_EVENTS_MOVING_AVG,
-    "events_rollup": SQL_EVENTS_ROLLUP,
-    "events_cube": SQL_EVENTS_CUBE,
-    "events_pivot": SQL_EVENTS_PIVOT,
-    "customer_set_ops": SQL_CUSTOMER_SET_OPS,
-    "asof_prior_click": SQL_ASOF_PRIOR_CLICK,
-    "value_band_join": SQL_VALUE_BAND_JOIN,
-    "events_distinct_stats": SQL_EVENTS_DISTINCT_STATS,
-    "props_stats": SQL_PROPS_STATS,
-    "order_priority_check": SQL_ORDER_PRIORITY_CHECK,
-    "small_quantity_revenue": SQL_SMALL_QUANTITY_REVENUE,
-    "stream_windowed_counts": SQL_STREAM_WINDOWED_COUNTS,
-    "stream_session_windows": SQL_STREAM_SESSION_WINDOWS,
-    "stream_click_attribution": SQL_STREAM_CLICK_ATTRIBUTION,
-    "stream_dedup_events": SQL_STREAM_DEDUP_EVENTS,
-    "stream_user_totals": SQL_STREAM_USER_TOTALS,
-    "events_distinct_sketch": SQL_EVENTS_DISTINCT_SKETCH,
-    "fuzzy_name_match": SQL_FUZZY_NAME_MATCH,
-    # exact KMV mergeability => the drained streaming state equals the batch
-    # sketch bit for bit; the streaming twin shares the batch oracle verbatim
-    "stream_distinct_sketch": SQL_EVENTS_DISTINCT_SKETCH,
-    "events_value_percentiles": SQL_EVENTS_VALUE_PERCENTILES,
-    "stream_debezium_merge": SQL_STREAM_DEBEZIUM_MERGE,
-    "events_funnel": SQL_EVENTS_FUNNEL,
-    "events_transitions": SQL_EVENTS_TRANSITIONS,
-    "events_outliers": SQL_EVENTS_OUTLIERS,
-    "supplier_triangles": SQL_SUPPLIER_TRIANGLES,
-    "events_grouping_sets": SQL_EVENTS_GROUPING_SETS,
-    "jsonl_documents_ingest": SQL_JSONL_DOCUMENTS_INGEST,
-    "csv_documents_ingest": SQL_CSV_DOCUMENTS_INGEST,
-    "orc_events_ingest": SQL_ORC_EVENTS_INGEST,
-    "events_retention_cohorts": SQL_EVENTS_RETENTION_COHORTS,
-    "asof_next_error": SQL_ASOF_NEXT_ERROR,
-    "events_intervals_merged": SQL_EVENTS_INTERVALS_MERGED,
-    "events_growth_accounting": SQL_EVENTS_GROWTH_ACCOUNTING,
-    "scalar_function_matrix": SQL_SCALAR_FUNCTION_MATRIX,
-    "events_bag_set_ops": SQL_EVENTS_BAG_SET_OPS,
-    "stream_late_data_drop": SQL_STREAM_LATE_DATA_DROP,
-    "stream_outer_attribution": SQL_STREAM_OUTER_ATTRIBUTION,
-    "events_hll_check": SQL_EVENTS_HLL_CHECK,
-    "array_function_suite": SQL_ARRAY_FUNCTION_SUITE,
-    "stream_topk_per_type": SQL_STREAM_TOPK_PER_TYPE,
-    "events_unpivot": SQL_EVENTS_UNPIVOT,
-    "events_mad": SQL_EVENTS_MAD,
-    "map_function_suite": SQL_MAP_FUNCTION_SUITE,
-    "events_hourly_profile": SQL_EVENTS_HOURLY_PROFILE,
-    "doc_global_ids": SQL_DOC_GLOBAL_IDS,
-}
-
-# stream_merge_state: same semantics as the batch flagship merge
-from dataplatform_cdc_pipeline_spark.queries import SQL_CDC_MERGE_FULL  # noqa: E402
-
-EXT_ORACLES["stream_merge_state"] = SQL_CDC_MERGE_FULL
-EXT_ORACLES["stream_dv_merge"] = SQL_CDC_MERGE_FULL
-
-# stream_txn_merge: exactly-once via manifest txns must land the same
-# final state as the batch merge (replay-skip asserted inside the query)
-EXT_ORACLES["stream_txn_merge"] = SQL_CDC_MERGE_FULL
-
-# stream_scd2_history: the streaming path must land the SAME history as
-# the batch path — shares cdc_scd2_history's oracle
-from dataplatform_cdc_pipeline_spark.queries import SQL_CDC_SCD2_HISTORY  # noqa: E402
-
-EXT_ORACLES["stream_scd2_history"] = SQL_CDC_SCD2_HISTORY
-
-# stream_scd2_enrich: micro-batch boundaries must not change point-in-
-# time join semantics — shares events_scd2_join's batch oracle
-from dataplatform_cdc_pipeline_spark.queries import SQL_EVENTS_SCD2_JOIN  # noqa: E402
-
-EXT_ORACLES["stream_scd2_enrich"] = SQL_EVENTS_SCD2_JOIN
-
 # stream_ivm_totals: the maintained view must equal a fresh GROUP BY of
 # the final merged state — the oracle aggregates the batch-merge oracle.
 SQL_STREAM_IVM_TOTALS = f"""
@@ -2992,4 +2965,72 @@ SELECT event_type, count(*) AS n,
          AS value_micros
 FROM state GROUP BY event_type
 """
-EXT_ORACLES["stream_ivm_totals"] = SQL_STREAM_IVM_TOTALS
+
+REGISTRY = {
+    q_sessionize_events: SQL_SESSIONIZE_EVENTS,
+    q_events_gapfill: SQL_EVENTS_GAPFILL,
+    q_events_pagerank: SQL_EVENTS_PAGERANK,
+    q_bloom_join_prune: SQL_BLOOM_JOIN_PRUNE,
+    q_events_value_histogram: SQL_EVENTS_VALUE_HISTOGRAM,
+    q_events_moving_avg: SQL_EVENTS_MOVING_AVG,
+    q_events_rollup: SQL_EVENTS_ROLLUP,
+    q_events_cube: SQL_EVENTS_CUBE,
+    q_events_pivot: SQL_EVENTS_PIVOT,
+    q_customer_set_ops: SQL_CUSTOMER_SET_OPS,
+    q_asof_prior_click: SQL_ASOF_PRIOR_CLICK,
+    q_value_band_join: SQL_VALUE_BAND_JOIN,
+    q_events_distinct_stats: SQL_EVENTS_DISTINCT_STATS,
+    q_props_stats: SQL_PROPS_STATS,
+    q_order_priority_check: SQL_ORDER_PRIORITY_CHECK,
+    q_small_quantity_revenue: SQL_SMALL_QUANTITY_REVENUE,
+    q_stream_windowed_counts: SQL_STREAM_WINDOWED_COUNTS,
+    q_stream_session_windows: SQL_STREAM_SESSION_WINDOWS,
+    q_stream_click_attribution: SQL_STREAM_CLICK_ATTRIBUTION,
+    q_stream_dedup_events: SQL_STREAM_DEDUP_EVENTS,
+    # same semantics as the batch flagship merge
+    q_stream_merge_state: SQL_CDC_MERGE_FULL,
+    q_stream_dv_merge: SQL_CDC_MERGE_FULL,
+    # the streaming path must land the SAME history as the batch path —
+    # shares cdc_scd2_history's oracle
+    q_stream_scd2_history: SQL_CDC_SCD2_HISTORY,
+    q_stream_ivm_totals: SQL_STREAM_IVM_TOTALS,
+    q_stream_user_totals: SQL_STREAM_USER_TOTALS,
+    q_events_distinct_sketch: SQL_EVENTS_DISTINCT_SKETCH,
+    q_fuzzy_name_match: SQL_FUZZY_NAME_MATCH,
+    # exact KMV mergeability => the drained streaming state equals the batch
+    # sketch bit for bit; the streaming twin shares the batch oracle verbatim
+    q_stream_distinct_sketch: SQL_EVENTS_DISTINCT_SKETCH,
+    q_events_value_percentiles: SQL_EVENTS_VALUE_PERCENTILES,
+    q_stream_debezium_merge: SQL_STREAM_DEBEZIUM_MERGE,
+    q_events_funnel: SQL_EVENTS_FUNNEL,
+    q_events_transitions: SQL_EVENTS_TRANSITIONS,
+    q_events_outliers: SQL_EVENTS_OUTLIERS,
+    q_supplier_triangles: SQL_SUPPLIER_TRIANGLES,
+    q_events_grouping_sets: SQL_EVENTS_GROUPING_SETS,
+    # micro-batch boundaries must not change point-in-time join semantics —
+    # shares events_scd2_join's batch oracle
+    q_stream_scd2_enrich: SQL_EVENTS_SCD2_JOIN,
+    q_jsonl_documents_ingest: SQL_JSONL_DOCUMENTS_INGEST,
+    q_csv_documents_ingest: SQL_CSV_DOCUMENTS_INGEST,
+    q_orc_events_ingest: SQL_ORC_EVENTS_INGEST,
+    q_events_retention_cohorts: SQL_EVENTS_RETENTION_COHORTS,
+    q_asof_next_error: SQL_ASOF_NEXT_ERROR,
+    # exactly-once via manifest txns must land the same final state as the
+    # batch merge (replay-skip asserted inside the query)
+    q_stream_txn_merge: SQL_CDC_MERGE_FULL,
+    q_events_intervals_merged: SQL_EVENTS_INTERVALS_MERGED,
+    q_events_growth_accounting: SQL_EVENTS_GROWTH_ACCOUNTING,
+    q_scalar_function_matrix: SQL_SCALAR_FUNCTION_MATRIX,
+    q_events_bag_set_ops: SQL_EVENTS_BAG_SET_OPS,
+    q_stream_late_data_drop: SQL_STREAM_LATE_DATA_DROP,
+    q_stream_outer_attribution: SQL_STREAM_OUTER_ATTRIBUTION,
+    q_events_hll_check: SQL_EVENTS_HLL_CHECK,
+    q_array_function_suite: SQL_ARRAY_FUNCTION_SUITE,
+    q_stream_topk_per_type: SQL_STREAM_TOPK_PER_TYPE,
+    q_stream_compact_runs: SQL_STREAM_COMPACT_RUNS,
+    q_events_unpivot: SQL_EVENTS_UNPIVOT,
+    q_events_mad: SQL_EVENTS_MAD,
+    q_map_function_suite: SQL_MAP_FUNCTION_SUITE,
+    q_events_hourly_profile: SQL_EVENTS_HOURLY_PROFILE,
+    q_doc_global_ids: SQL_DOC_GLOBAL_IDS,
+}

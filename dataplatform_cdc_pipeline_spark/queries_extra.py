@@ -10,6 +10,9 @@ truncated MD5 prefixes), never cross-engine floats.
 
 from __future__ import annotations
 
+import datetime
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -518,6 +521,154 @@ ORDER BY tbl, key
 """
 
 
+_SPLIT = "2024-01-15 00:00:00"
+_ROW_SCHEMA = "tbl string, key string, val long"
+
+
+def q_txn_recover_torn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Presumed-commit recovery made oracle-visible (multi_txn.py:244):
+    window 1 commits normally through the two-table coordinator; window
+    2's transaction is DECIDED (the meta-manifest CAS landed) but the
+    coordinator 'crashes' before finalize — simulated by suppressing
+    ``_finalize`` for exactly that commit, which leaves both staged
+    manifests unlinked. Direct table reads in the in-doubt window still
+    see the window-1 versions (the ``*_pre`` rows — 2PC's documented
+    stale-read window). ``recover()`` then re-finalizes every decided
+    transaction: it must link exactly the 2 staged manifests
+    (``recover_links`` row) and bring both tables to the full
+    transactional state. A recovery that lost a table, double-applied a
+    window, or re-ran thunks diverges the hash (table B accumulates
+    across windows, so any replay shifts its totals)."""
+    from pyspark.sql import types as T
+
+    from dataplatform_cdc_pipeline_spark.operators.multi_txn import MultiTableTxn
+    from dataplatform_cdc_pipeline_spark.operators.snapshot_target import (
+        SnapshotMergeTarget,
+    )
+    from dataplatform_cdc_pipeline_spark.plans.merge_plan import (
+        build_changes,
+        window_scan,
+    )
+    from dataplatform_cdc_pipeline_spark.queries import cdc_feed
+    from dataplatform_cdc_pipeline_spark.sources.cdc import (
+        USER_STATE_SCHEMA,
+        user_state_config,
+    )
+
+    raw = cdc_feed(spark, sf_dir)
+    cfg_a = user_state_config()
+    cfg_b = user_state_config(target_table="type_totals", pk="event_type")
+    b_schema = T.StructType(
+        [
+            T.StructField("event_type", T.StringType()),
+            T.StructField("n_rows", T.LongType()),
+        ]
+    )
+    tmp = tempfile.mkdtemp(prefix="txn_recover_q_")
+    ta = SnapshotMergeTarget(spark, f"{tmp}/a", cfg_a, USER_STATE_SCHEMA)
+    tb = SnapshotMergeTarget(spark, f"{tmp}/b", cfg_b, b_schema)
+    txn = MultiTableTxn(f"{tmp}/txn")
+    split = datetime.datetime(2024, 1, 15)
+
+    def commit_window(lo, hi) -> None:
+        w = window_scan(raw, cfg_a, lo, hi)
+        changes_a = build_changes(w, USER_STATE_SCHEMA, cfg_a, deterministic_audit=True)
+        delta = (
+            w.select(F.get_json_object("data", "$.event_type").alias("event_type"))
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("__d"))
+        )
+        prev = tb.read().select("event_type", F.col("n_rows").alias("__prev"))
+        changes_b = delta.join(prev, "event_type", "left").select(
+            "event_type",
+            (F.col("__d") + F.coalesce(F.col("__prev"), F.lit(0)))
+            .cast("long")
+            .alias("n_rows"),
+            F.lit(None).cast("timestamp").alias("source_ts_ns_order"),
+            F.lit(0).cast("long").alias("pos"),
+            F.lit("c").alias("__op"),
+        )
+        txn.commit(
+            [
+                (ta, lambda ca=changes_a: ta.merge(ca)),
+                (tb, lambda cb=changes_b: tb.merge(cb)),
+            ]
+        )
+
+    commit_window(None, split)
+    bench_phases.mark("txn_w1")
+    # window 2: crash immediately AFTER the decide CAS, BEFORE finalize —
+    # the staged manifests stay unlinked, exactly the in-doubt state
+    # recover() exists for (presumed commit: decided => will finalize)
+    orig_finalize = txn._finalize
+    txn._finalize = lambda meta: None
+    try:
+        commit_window(split, None)
+    finally:
+        txn._finalize = orig_finalize
+    bench_phases.mark("txn_w2_decided_not_finalized")
+
+    def rows(tag_a: str, tag_b: str) -> DataFrame:
+        a = ta.read().select(
+            F.lit(tag_a).alias("tbl"),
+            F.col("user_id").cast("string").alias("key"),
+            F.floor(F.col("value") * F.lit(1_000_000.0)).cast("long").alias("val"),
+        )
+        b = tb.read().select(
+            F.lit(tag_b).alias("tbl"),
+            F.col("event_type").alias("key"),
+            F.col("n_rows").alias("val"),
+        )
+        return a.unionByName(b)
+
+    # the in-doubt window IS observable through direct reads: pin it
+    # eagerly before recovery flips the manifests underneath the plan
+    pre = rows("state_pre", "totals_pre").localCheckpoint(eager=True)
+    n_links = txn.recover()
+    bench_phases.mark("recover")
+    post = rows("state", "totals")
+    links = spark.createDataFrame(
+        [("recover_links", "n", n_links)], _ROW_SCHEMA
+    )
+    return pre.unionByName(post).unionByName(links)
+
+
+SQL_TXN_RECOVER_TORN = f"""
+WITH r1 AS (
+  SELECT user_id,
+         CASE WHEN event_type = 'error' THEN 'd'
+              WHEN event_type = 'signup' THEN 'c' ELSE 'u' END AS op,
+         value,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts::TIMESTAMP) DESC,
+                                     event_id DESC) AS rn
+  FROM events WHERE ts <= TIMESTAMP '{_SPLIT}'),
+r2 AS (
+  SELECT user_id,
+         CASE WHEN event_type = 'error' THEN 'd'
+              WHEN event_type = 'signup' THEN 'c' ELSE 'u' END AS op,
+         value,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts::TIMESTAMP) DESC,
+                                     event_id DESC) AS rn
+  FROM events)
+SELECT 'state_pre' AS tbl, user_id::VARCHAR AS key,
+       floor(value * 1000000.0)::BIGINT AS val
+FROM r1 WHERE rn = 1 AND op != 'd'
+UNION ALL
+SELECT 'totals_pre', event_type, count(*)::BIGINT
+FROM events WHERE ts <= TIMESTAMP '{_SPLIT}' GROUP BY event_type
+UNION ALL
+SELECT 'state', user_id::VARCHAR, floor(value * 1000000.0)::BIGINT
+FROM r2 WHERE rn = 1 AND op != 'd'
+UNION ALL
+SELECT 'totals', event_type, count(*)::BIGINT FROM events GROUP BY event_type
+UNION ALL
+SELECT 'recover_links', 'n', 2::BIGINT
+ORDER BY tbl, key
+"""
+
+
 # ---------------------------------------------------------------------------
 # window navigation-function contract (frames + IGNORE NULLS)
 # ---------------------------------------------------------------------------
@@ -596,7 +747,6 @@ WINDOW
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ORDER BY user_id, event_id
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -715,7 +865,6 @@ FROM documents"""
 )
 
 
-
 # ---------------------------------------------------------------------------
 # version-keyed result cache (operators/result_cache.py)
 # ---------------------------------------------------------------------------
@@ -794,7 +943,6 @@ SELECT event_type, count(*) AS n_users,
 FROM ranked WHERE rn = 1 AND op != 'd'
 GROUP BY event_type ORDER BY event_type
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -927,7 +1075,6 @@ ORDER BY tbl, key
 """
 
 
-
 # ---------------------------------------------------------------------------
 # exact aggregate-function matrix + explicit NULL-ordering contract
 # ---------------------------------------------------------------------------
@@ -1032,7 +1179,6 @@ FROM ev ORDER BY event_type, event_id
 """
 
 
-
 def q_stream_dlq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of cdc_merge_dlq: the poisoned feed arrives as two
     mtime-ordered bronze files (one per watermark window) processed as
@@ -1118,7 +1264,6 @@ def q_stream_dlq_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return state_rows.unionByName(dlq_rows)
 
 
-
 # ---------------------------------------------------------------------------
 # approx_percentile error-envelope pin (the events_hll_check pattern)
 # ---------------------------------------------------------------------------
@@ -1198,38 +1343,21 @@ FROM r WHERE rn = (n + 1) // 2 ORDER BY event_type
 """
 
 
-EXTRA_QUERIES = {
-    "events_bfs_reach": q_events_bfs_reach,
-    "events_time_weighted": q_events_time_weighted,
-    "basket_pair_lift": q_basket_pair_lift,
-    "kmv_set_ops": q_kmv_set_ops,
-    "feature_hashing": q_feature_hashing,
-    "cdc_multi_txn": q_cdc_multi_txn,
-    "window_nav_suite": q_window_nav_suite,
-    "revenue_share": q_revenue_share,
-    "corpus_profile": q_corpus_profile,
-    "cdc_cached_read": q_cdc_cached_read,
-    "cdc_merge_dlq": q_cdc_merge_dlq,
-    "agg_function_matrix": q_agg_function_matrix,
-    "null_order_suite": q_null_order_suite,
-    "stream_dlq_merge": q_stream_dlq_merge,
-    "events_percentile_check": q_events_percentile_check,
-}
-
-EXTRA_ORACLES = {
-    "events_bfs_reach": SQL_EVENTS_BFS_REACH,
-    "events_time_weighted": SQL_EVENTS_TIME_WEIGHTED,
-    "basket_pair_lift": SQL_BASKET_PAIR_LIFT,
-    "kmv_set_ops": SQL_KMV_SET_OPS,
-    "feature_hashing": SQL_FEATURE_HASHING,
-    "cdc_multi_txn": SQL_CDC_MULTI_TXN,
-    "window_nav_suite": SQL_WINDOW_NAV_SUITE,
-    "revenue_share": SQL_REVENUE_SHARE,
-    "corpus_profile": SQL_CORPUS_PROFILE,
-    "cdc_cached_read": SQL_CDC_CACHED_READ,
-    "cdc_merge_dlq": SQL_CDC_MERGE_DLQ,
-    "agg_function_matrix": SQL_AGG_FUNCTION_MATRIX,
-    "null_order_suite": SQL_NULL_ORDER_SUITE,
-    "stream_dlq_merge": SQL_CDC_MERGE_DLQ,
-    "events_percentile_check": SQL_EVENTS_PERCENTILE_CHECK,
+REGISTRY = {
+    q_events_bfs_reach: SQL_EVENTS_BFS_REACH,
+    q_events_time_weighted: SQL_EVENTS_TIME_WEIGHTED,
+    q_basket_pair_lift: SQL_BASKET_PAIR_LIFT,
+    q_kmv_set_ops: SQL_KMV_SET_OPS,
+    q_feature_hashing: SQL_FEATURE_HASHING,
+    q_cdc_multi_txn: SQL_CDC_MULTI_TXN,
+    q_txn_recover_torn: SQL_TXN_RECOVER_TORN,
+    q_window_nav_suite: SQL_WINDOW_NAV_SUITE,
+    q_revenue_share: SQL_REVENUE_SHARE,
+    q_corpus_profile: SQL_CORPUS_PROFILE,
+    q_cdc_cached_read: SQL_CDC_CACHED_READ,
+    q_cdc_merge_dlq: SQL_CDC_MERGE_DLQ,
+    q_agg_function_matrix: SQL_AGG_FUNCTION_MATRIX,
+    q_null_order_suite: SQL_NULL_ORDER_SUITE,
+    q_stream_dlq_merge: SQL_CDC_MERGE_DLQ,
+    q_events_percentile_check: SQL_EVENTS_PERCENTILE_CHECK,
 }

@@ -190,7 +190,7 @@ _PQ_K = 4        # codes per subspace
 _PQ_ITER = 2     # Lloyd iterations per codebook
 _PQ_SUBLEN = 16
 _PQ_TOPK = 5
-_N_QUERIES = 10
+_N_QUERY_VECS = 10
 
 
 def _pq_books(spark: SparkSession, sf_dir: str):
@@ -209,7 +209,7 @@ def q_embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataplatform_cdc_pipeline_spark.operators.pq import pq_topk
 
     emb, books = _pq_books(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    queries = emb.filter(F.col("vec_id") < _N_QUERY_VECS)
     return pq_topk(emb, queries, books, k=_PQ_TOPK)
 
 
@@ -261,7 +261,7 @@ codes AS (SELECT vec_id, sub, cluster AS code FROM (
                    row_number() OVER (PARTITION BY vec_id, sub
                                       ORDER BY d, cluster) AS rk
             FROM d3) WHERE rk = 1),
-qsp AS (SELECT * FROM sp WHERE vec_id < {_N_QUERIES}),
+qsp AS (SELECT * FROM sp WHERE vec_id < {_N_QUERY_VECS}),
 dtab AS (SELECT q.vec_id AS query_id, c.sub, c.cluster AS code,
                 SUM((q.xi - c.m) * (q.xi - c.m)) AS d
          FROM qsp q JOIN c2 c ON q.sub = c.sub AND q.spos = c.spos
@@ -291,7 +291,7 @@ def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataplatform_cdc_pipeline_spark.operators.pq import pq_topk
 
     emb, books = _pq_books(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    queries = emb.filter(F.col("vec_id") < _N_QUERY_VECS)
     pq5 = pq_topk(emb, queries, books, k=_PQ_TOPK).select("query_id", "nbr_id")
 
     pts = quantized_points(emb)
@@ -338,7 +338,7 @@ SQL_PQ_RECALL_EVAL = f"""
 WITH {_PQ_CTES},
 ed AS (SELECT q.vec_id AS query_id, p.vec_id AS nbr_id,
               SUM((q.xi - p.xi) * (q.xi - p.xi)) AS d2
-       FROM pts p JOIN pts q ON q.vec_id < {_N_QUERIES}
+       FROM pts p JOIN pts q ON q.vec_id < {_N_QUERY_VECS}
                             AND q.vec_id != p.vec_id AND q.pos = p.pos
        GROUP BY 1, 2),
 e5 AS (SELECT query_id, nbr_id FROM (
@@ -831,7 +831,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("nbr_id"), as_double_vec("embedding").alias("nbr_vec")
     ).withColumn("nbr_norm", norm_expr(F.col("nbr_vec")))
-    qs = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+    qs = emb.filter(F.col("vec_id") < _N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("q_vec")
     ).withColumn("q_norm", norm_expr(F.col("q_vec")))
     scored = corpus.join(
@@ -859,7 +859,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_HARD_NEGATIVES = f"""
 WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
            FROM embeddings),
-q AS (SELECT * FROM v WHERE vec_id < {_N_QUERIES}),
+q AS (SELECT * FROM v WHERE vec_id < {_N_QUERY_VECS}),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS nbr_id, {_RRF_COS} AS cosine
   FROM q, v c WHERE q.vec_id != c.vec_id),
@@ -1385,8 +1385,8 @@ def q_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunc = emb.select(
         "vec_id", F.slice("embedding", 1, _TRUNC_DIMS).alias("embedding")
     )
-    queries_full = emb.filter(F.col("vec_id") < _N_QUERIES)
-    queries_trunc = trunc.filter(F.col("vec_id") < _N_QUERIES)
+    queries_full = emb.filter(F.col("vec_id") < _N_QUERY_VECS)
+    queries_trunc = trunc.filter(F.col("vec_id") < _N_QUERY_VECS)
     approx = brute_force_topk(trunc, queries_trunc, k=_PQ_TOPK).select(
         "query_id", "nbr_id"
     )
@@ -1422,14 +1422,14 @@ e AS (SELECT query_id, nbr_id FROM (
                row_number() OVER (PARTITION BY q.vec_id
                                   ORDER BY {_RRF_COS} DESC, c.vec_id ASC) AS rk
         FROM v q, v c
-        WHERE q.vec_id < {_N_QUERIES} AND q.vec_id != c.vec_id)
+        WHERE q.vec_id < {_N_QUERY_VECS} AND q.vec_id != c.vec_id)
       WHERE rk <= {_PQ_TOPK}),
 a AS (SELECT query_id, nbr_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
                row_number() OVER (PARTITION BY q.vec_id
                                   ORDER BY {_RRF_COS} DESC, c.vec_id ASC) AS rk
         FROM tv q, tv c
-        WHERE q.vec_id < {_N_QUERIES} AND q.vec_id != c.vec_id)
+        WHERE q.vec_id < {_N_QUERY_VECS} AND q.vec_id != c.vec_id)
       WHERE rk <= {_PQ_TOPK}),
 nh AS (SELECT e.query_id, count(*) AS n_hit
        FROM e JOIN a ON e.query_id = a.query_id AND e.nbr_id = a.nbr_id
@@ -2798,86 +2798,44 @@ spans{w} AS (SELECT doc_id, span_id, min(pos) AS s, max(pos) + {w} - 1 AS e
 SQL_SUBSTRING_DUP_PROFILE = _sql_substring_dup_profile()
 
 
-PREP_QUERIES = {
-    "boilerplate_strip": q_boilerplate_strip,
-    "corpus_weighted_sample": q_corpus_weighted_sample,
-    "pii_k_anonymity": q_pii_k_anonymity,
-    "embedding_pq_topk": q_embedding_pq_topk,
-    "pq_recall_eval": q_pq_recall_eval,
-    "events_psi_drift": q_events_psi_drift,
-    "training_batches": q_training_batches,
-    "tfidf_keywords": q_tfidf_keywords,
-    "media_phash_dedup": q_media_phash_dedup,
-    "domain_temperature_sample": q_domain_temperature_sample,
-    "hybrid_search_rrf": q_hybrid_search_rrf,
-    "hard_negatives": q_hard_negatives,
-    "phrase_search": q_phrase_search,
-    "events_hopping_windows": q_events_hopping_windows,
-    "pii_masked_read": q_pii_masked_read,
-    "pii_l_diversity": q_pii_l_diversity,
-    "span_corruption": q_span_corruption,
-    "stream_psi_drift": q_stream_psi_drift,
-    "regression_suite": q_regression_suite,
-    "dim_truncation_recall": q_dim_truncation_recall,
-    "events_ewma": q_events_ewma,
-    "curation_uncertainty_sample": q_curation_uncertainty_sample,
-    "orders_cohort_ltv": q_orders_cohort_ltv,
-    "cluster_safe_split": q_cluster_safe_split,
-    "split_leakage_audit": q_split_leakage_audit,
-    "packing_efficiency_eval": q_packing_efficiency_eval,
-    "stream_sliding_counts": q_stream_sliding_counts,
-    "text_ngram_novelty": q_text_ngram_novelty,
-    "dup_ratio_by_source": q_dup_ratio_by_source,
-    "quality_calibration": q_quality_calibration,
-    "text_zipf_fit": q_text_zipf_fit,
-    "session_window_overlap": q_session_window_overlap,
-    "dedup_substring_spans": q_dedup_substring_spans,
-    "dedup_substring_bpe": q_dedup_substring_bpe,
-    "incremental_dedup_batch": q_incremental_dedup_batch,
-    "stream_dedup_index": q_stream_dedup_index,
-    "decontamination_spans": q_decontamination_spans,
-    "dedup_soft_weights": q_dedup_soft_weights,
-    "substring_dup_profile": q_substring_dup_profile,
-}
-
-PREP_ORACLES = {
-    "boilerplate_strip": SQL_BOILERPLATE_STRIP,
-    "corpus_weighted_sample": SQL_CORPUS_WEIGHTED_SAMPLE,
-    "pii_k_anonymity": SQL_PII_K_ANONYMITY,
-    "embedding_pq_topk": SQL_EMBEDDING_PQ_TOPK,
-    "pq_recall_eval": SQL_PQ_RECALL_EVAL,
-    "events_psi_drift": SQL_EVENTS_PSI_DRIFT,
-    "training_batches": SQL_TRAINING_BATCHES,
-    "tfidf_keywords": SQL_TFIDF_KEYWORDS,
-    "media_phash_dedup": SQL_MEDIA_PHASH_DEDUP,
-    "domain_temperature_sample": SQL_DOMAIN_TEMPERATURE_SAMPLE,
-    "hybrid_search_rrf": _sql_hybrid_rrf(),
-    "hard_negatives": SQL_HARD_NEGATIVES,
-    "phrase_search": SQL_PHRASE_SEARCH,
-    "events_hopping_windows": SQL_EVENTS_HOPPING_WINDOWS,
-    "pii_masked_read": SQL_PII_MASKED_READ,
-    "pii_l_diversity": SQL_PII_L_DIVERSITY,
-    "span_corruption": SQL_SPAN_CORRUPTION,
-    "stream_psi_drift": SQL_STREAM_PSI_DRIFT,
-    "regression_suite": SQL_REGRESSION_SUITE,
-    "dim_truncation_recall": SQL_DIM_TRUNCATION_RECALL,
-    "events_ewma": SQL_EVENTS_EWMA,
-    "curation_uncertainty_sample": SQL_CURATION_UNCERTAINTY_SAMPLE,
-    "orders_cohort_ltv": SQL_ORDERS_COHORT_LTV,
-    "cluster_safe_split": _sql_cluster_safe_split(),
-    "split_leakage_audit": _sql_split_leakage_audit(),
-    "packing_efficiency_eval": SQL_PACKING_EFFICIENCY_EVAL,
-    "stream_sliding_counts": SQL_STREAM_SLIDING_COUNTS,
-    "text_ngram_novelty": SQL_TEXT_NGRAM_NOVELTY,
-    "dup_ratio_by_source": _sql_dup_ratio_by_source(),
-    "quality_calibration": _sql_quality_calibration(),
-    "text_zipf_fit": SQL_TEXT_ZIPF_FIT,
-    "session_window_overlap": SQL_SESSION_WINDOW_OVERLAP,
-    "dedup_substring_spans": SQL_DEDUP_SUBSTRING_SPANS,
-    "dedup_substring_bpe": SQL_DEDUP_SUBSTRING_BPE,
-    "incremental_dedup_batch": SQL_INCREMENTAL_DEDUP_BATCH,
-    "stream_dedup_index": SQL_STREAM_DEDUP_INDEX,
-    "decontamination_spans": SQL_DECONTAMINATION_SPANS,
-    "dedup_soft_weights": SQL_DEDUP_SOFT_WEIGHTS,
-    "substring_dup_profile": SQL_SUBSTRING_DUP_PROFILE,
+REGISTRY = {
+    q_boilerplate_strip: SQL_BOILERPLATE_STRIP,
+    q_corpus_weighted_sample: SQL_CORPUS_WEIGHTED_SAMPLE,
+    q_pii_k_anonymity: SQL_PII_K_ANONYMITY,
+    q_embedding_pq_topk: SQL_EMBEDDING_PQ_TOPK,
+    q_pq_recall_eval: SQL_PQ_RECALL_EVAL,
+    q_events_psi_drift: SQL_EVENTS_PSI_DRIFT,
+    q_training_batches: SQL_TRAINING_BATCHES,
+    q_tfidf_keywords: SQL_TFIDF_KEYWORDS,
+    q_media_phash_dedup: SQL_MEDIA_PHASH_DEDUP,
+    q_domain_temperature_sample: SQL_DOMAIN_TEMPERATURE_SAMPLE,
+    q_hybrid_search_rrf: _sql_hybrid_rrf(),
+    q_hard_negatives: SQL_HARD_NEGATIVES,
+    q_phrase_search: SQL_PHRASE_SEARCH,
+    q_events_hopping_windows: SQL_EVENTS_HOPPING_WINDOWS,
+    q_pii_masked_read: SQL_PII_MASKED_READ,
+    q_pii_l_diversity: SQL_PII_L_DIVERSITY,
+    q_span_corruption: SQL_SPAN_CORRUPTION,
+    q_stream_psi_drift: SQL_STREAM_PSI_DRIFT,
+    q_regression_suite: SQL_REGRESSION_SUITE,
+    q_dim_truncation_recall: SQL_DIM_TRUNCATION_RECALL,
+    q_events_ewma: SQL_EVENTS_EWMA,
+    q_curation_uncertainty_sample: SQL_CURATION_UNCERTAINTY_SAMPLE,
+    q_orders_cohort_ltv: SQL_ORDERS_COHORT_LTV,
+    q_cluster_safe_split: _sql_cluster_safe_split(),
+    q_split_leakage_audit: _sql_split_leakage_audit(),
+    q_packing_efficiency_eval: SQL_PACKING_EFFICIENCY_EVAL,
+    q_stream_sliding_counts: SQL_STREAM_SLIDING_COUNTS,
+    q_text_ngram_novelty: SQL_TEXT_NGRAM_NOVELTY,
+    q_dup_ratio_by_source: _sql_dup_ratio_by_source(),
+    q_quality_calibration: _sql_quality_calibration(),
+    q_text_zipf_fit: SQL_TEXT_ZIPF_FIT,
+    q_session_window_overlap: SQL_SESSION_WINDOW_OVERLAP,
+    q_dedup_substring_spans: SQL_DEDUP_SUBSTRING_SPANS,
+    q_dedup_substring_bpe: SQL_DEDUP_SUBSTRING_BPE,
+    q_incremental_dedup_batch: SQL_INCREMENTAL_DEDUP_BATCH,
+    q_stream_dedup_index: SQL_STREAM_DEDUP_INDEX,
+    q_decontamination_spans: SQL_DECONTAMINATION_SPANS,
+    q_dedup_soft_weights: SQL_DEDUP_SOFT_WEIGHTS,
+    q_substring_dup_profile: SQL_SUBSTRING_DUP_PROFILE,
 }

@@ -1,6 +1,6 @@
-"""Measured 10× step for the r11 staged/promoted operators:
-cdc_compact_binpack, stream_compact_runs (staged r12) and
-incremental_bm25_batch, stream_bm25_index (promoted r11).
+"""Measured 10× step for the table-maintenance and incremental-BM25
+queries: cdc_compact_binpack, stream_compact_runs, incremental_bm25_batch
+and stream_bm25_index.
 
 Same protocol as scripts/scale_bench.py: sf0.01 → sf0.1 → synthetic
 sf1 (sf0.1 events/documents replicated 10× with shifted ids so key
@@ -22,12 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from dataplatform_cdc_pipeline_spark.queries_promoted_r11 import (
-    PROMOTED_R11_QUERIES,
-)
-from dataplatform_cdc_pipeline_spark.queries_promoted_r12 import (
-    PROMOTED_R12_QUERIES,
-)
+import __spark_entry__ as entrymod
 from dataplatform_cdc_pipeline_spark.session import get_spark
 from dataplatform_cdc_pipeline_spark.sources.tables import load_table
 
@@ -36,7 +31,12 @@ SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1synth_r11"
 REPL = 10
 
-QUERIES = dict(**PROMOTED_R12_QUERIES, **PROMOTED_R11_QUERIES)
+NAMES = (
+    "cdc_compact_binpack",
+    "stream_compact_runs",
+    "incremental_bm25_batch",
+    "stream_bm25_index",
+)
 
 
 def build_sf1(spark) -> None:
@@ -69,7 +69,9 @@ def main() -> None:
     spark = get_spark("compact-scale-bench")
     build_sf1(spark)
     results: dict[str, dict[str, float]] = {}
-    for name, fn in QUERIES.items():
+    registry = entrymod.queries()
+    for name in NAMES:
+        fn = registry[name]
         results[name] = {}
         for label, sf_dir in (("sf0.01", SF001), ("sf0.1", SF01), ("sf1x", SF1)):
             t0 = time.time()

@@ -14,3 +14,18 @@ def sf_dir():
     import os
 
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """DuckDB connection with one view per testdata table — the oracle
+    side of the driver-style parity gate."""
+    import duckdb
+
+    from dataplatform_cdc_pipeline_spark.sources.tables import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()

@@ -1,20 +1,12 @@
 """Incremental BM25 index (operators/bm25_index.py): index search must
 be bit-identical to the from-scratch bm25_search over the union corpus
-(including corpora with zero-token documents), batch replay must be
-idempotent, and the two r11-promoted queries must pass the driver-style
-DuckDB parity gate."""
+(including corpora with zero-token documents), and batch replay must be
+idempotent. The BM25 queries' DuckDB parity gate lives in
+tests/test_registry_contract.py."""
 
 import os
-import sys
 
-import duckdb
 import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
-
-import __spark_entry__ as entrymod
-from check_parity import dtype_mismatches, normalize
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark.operators.bm25_index import (
@@ -22,11 +14,7 @@ from dataplatform_cdc_pipeline_spark.operators.bm25_index import (
 )
 from dataplatform_cdc_pipeline_spark.operators.search import bm25_search
 from dataplatform_cdc_pipeline_spark.queries_llm import BM25_TERMS
-from dataplatform_cdc_pipeline_spark.queries_promoted_r11 import (
-    PROMOTED_R11_ORACLES,
-    PROMOTED_R11_QUERIES,
-)
-from dataplatform_cdc_pipeline_spark.sources.tables import TABLES, load_table
+from dataplatform_cdc_pipeline_spark.sources.tables import load_table
 
 
 def _ranked(df):
@@ -236,36 +224,6 @@ def test_stream_replay_after_checkpoint_loss_is_idempotent(spark, sf_dir, tmp_pa
         stream_bm25_index(spark, src, "doc_id long, text string", work, BM25_TERMS)
     )
     assert after == before
-
-
-def test_promoted_r11_registered_with_oracles():
-    """Promoted with the r11 rotation (r10 verdict task 3); with the
-    r12 rotation the pair LEADS the window as its never-driver-verified
-    head (slots 14-15), with matching oracles."""
-    q, o = entrymod.queries(), entrymod.oracle_sql()
-    assert list(q)[13:15] == ["incremental_bm25_batch", "stream_bm25_index"]
-    for name in PROMOTED_R11_QUERIES:
-        assert q[name] is PROMOTED_R11_QUERIES[name]
-        assert o[name] == PROMOTED_R11_ORACLES[name]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", sorted(PROMOTED_R11_QUERIES))
-def test_promoted_r11_query_matches_oracle(spark, sf_dir, duck, name):
-    sdf = PROMOTED_R11_QUERIES[name](spark, sf_dir).toPandas()
-    odf = duck.execute(PROMOTED_R11_ORACLES[name]).fetchdf()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert not dtype_mismatches(sdf, odf)  # driver hash is dtype-sensitive
-    assert len(sdf) == len(odf) > 0
-    assert normalize(sdf) == normalize(odf)
 
 
 def test_compact_segments_preserves_scores_and_consolidates(

@@ -1,19 +1,10 @@
 """Small-file compaction (operators/compaction.py + the streaming run
 consolidation): plan math, content invariance, the zero-I/O carried
-path, checkpoint-loss replay idempotence, and the r12-promoted queries'
-driver-style DuckDB parity gate plus their registration contract."""
+path, and checkpoint-loss replay idempotence. The compaction queries'
+DuckDB parity gate lives in tests/test_registry_contract.py."""
 
 import os
-import sys
 
-import duckdb
-import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
-
-import __spark_entry__ as entrymod
-from check_parity import dtype_mismatches, normalize
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark.operators.compaction import (
@@ -22,11 +13,8 @@ from dataplatform_cdc_pipeline_spark.operators.compaction import (
     plan_compaction,
     sort_pack_bins,
 )
-from dataplatform_cdc_pipeline_spark.queries_promoted_r12 import (
-    PROMOTED_R12_ORACLES,
-    PROMOTED_R12_QUERIES,
-)
-from dataplatform_cdc_pipeline_spark.sources.tables import TABLES, load_table
+from dataplatform_cdc_pipeline_spark.queries_ext import q_stream_compact_runs
+from dataplatform_cdc_pipeline_spark.sources.tables import load_table
 
 
 def test_binpack_plan_math(spark):
@@ -167,13 +155,13 @@ def test_stream_replay_after_checkpoint_loss_is_idempotent(
 ):
     """Checkpoint loss replays batch ids from 0 against a work dir that
     already holds every batch's future — landing partitions and run
-    partitions must be reconstructed byte-identically."""
+    partitions must be reconstructed byte-identically, and equal the runs
+    the registered query reports."""
     import shutil
 
-    q = PROMOTED_R12_QUERIES["stream_compact_runs"]
-    # run the query once, capture, then replay its stream with the same
-    # work dir minus the checkpoint — easiest through the module's own
-    # primitives so the work dir is under our control
+    # replay the stream with the same work dir minus the checkpoint —
+    # easiest through the module's own primitives so the work dir is
+    # under our control
     import glob as _glob
 
     from dataplatform_cdc_pipeline_spark.streaming.compaction_stream import (
@@ -203,38 +191,6 @@ def test_stream_replay_after_checkpoint_loss_is_idempotent(
         run_stats(spark, work, "event_id", "event_id long, value double", 5)
     )
     assert after == before
-    assert q is PROMOTED_R12_QUERIES["stream_compact_runs"]  # sanity
-
-
-def test_promoted_r12_registered_at_tail():
-    """Promoted WITH the r12 rotation (r11 verdict task 3): the trio is
-    registered, its oracles travel with it, and it sits at the registry
-    tail so it leads the r13 window as the never-verified head."""
-    q = entrymod.queries()
-    assert len(q) == 248
-    assert set(PROMOTED_R12_QUERIES) <= set(q)
-    assert set(PROMOTED_R12_QUERIES) == set(PROMOTED_R12_ORACLES)
-    assert list(q)[-3:] == [
-        "cdc_compact_binpack", "stream_compact_runs", "bm25_index_erasure",
-    ]
-    o = entrymod.oracle_sql()
-    assert all(o[n] == PROMOTED_R12_ORACLES[n] for n in PROMOTED_R12_ORACLES)
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", sorted(PROMOTED_R12_QUERIES))
-def test_promoted_r12_query_matches_oracle(spark, sf_dir, duck, name):
-    sdf = PROMOTED_R12_QUERIES[name](spark, sf_dir).toPandas()
-    odf = duck.execute(PROMOTED_R12_ORACLES[name]).fetchdf()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert not dtype_mismatches(sdf, odf)  # driver hash is dtype-sensitive
-    assert len(sdf) == len(odf) > 0
-    assert normalize(sdf) == normalize(odf)
+    assert before == _ranked(
+        q_stream_compact_runs(spark, sf_dir).filter(F.col("phase") != "total")
+    )

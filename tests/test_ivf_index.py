@@ -121,6 +121,8 @@ def test_rebootstrap_refused_and_unbootstrapped_fails_loud(spark, emb):
     idx = IncrementalIvfIndex(spark, tempfile.mkdtemp(prefix="ivfix_") + "/ix")
     with pytest.raises(ValueError, match="not bootstrapped"):
         idx.centroids()
+    with pytest.raises(ValueError, match="not bootstrapped"):
+        idx.scales()
     idx.bootstrap("base", base)
     with pytest.raises(ValueError, match="already bootstrapped"):
         idx.bootstrap("again", base)
@@ -178,6 +180,34 @@ def test_drift_triggers_refit_and_probe_matches_from_scratch(spark, emb):
     assert got == want and len(got) == 25
     # the drifted rows are reachable through the refitted index
     assert any(r[2] % 10 == 3 for r in got)
+
+
+def test_refit_by_another_handle_invalidates_memo(spark, emb):
+    """A handle that memoized the frozen centroids/scales must serve the
+    NEW artifacts after a different handle on the same path refits it —
+    the same answers as a freshly opened handle."""
+    base, b1, _ = _splits(emb)
+    path = tempfile.mkdtemp(prefix="ivfix_") + "/ix"
+    a = IncrementalIvfIndex(spark, path)
+    a.bootstrap("base", base)
+    drifted = b1.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x * F.lit(3.0)).alias("embedding"),
+        "label",
+    ).localCheckpoint(eager=True)
+    corpus = base.unionByName(drifted)
+    stale_scales = a.scales()
+    a.assign_cells(corpus)  # memoizes the bootstrap centroids too
+
+    IncrementalIvfIndex(spark, path).refit("refit1", corpus)
+    fresh = IncrementalIvfIndex(spark, path)
+    assert fresh.scales() != stale_scales
+    assert a.scales() == fresh.scales()
+
+    def cells(ix):
+        return sorted(map(tuple, ix.assign_cells(corpus).collect()))
+
+    assert cells(a) == cells(fresh)
 
 
 def test_refit_requires_bootstrap(spark, emb):

@@ -144,15 +144,18 @@ def test_assign_expr_matches_windowed_rank1(spark, sf_dir):
     assert new == old and len(new) == emb.count()
 
 
-def test_assign_expr_exact_tie_routes_to_lowest_cell(spark):
+def test_assign_expr_exact_tie_routes_to_lowest_cell(spark, tmp_path):
     """A vector exactly equidistant from two centroids (here: identical
     cosine to both) must land in the LOWER cell id — the tiebreak the
     windowed rank-1 (cell asc) used."""
+    import os
+
     from dataplatform_cdc_pipeline_spark.operators.ivf_index import (
         IncrementalIvfIndex,
     )
 
-    idx = IncrementalIvfIndex.__new__(IncrementalIvfIndex)
+    idx = IncrementalIvfIndex(spark, str(tmp_path / "ix"))
+    os.makedirs(idx.centroids_path)  # the memo keys on this directory
 
     # centroids() is only read by _assign_expr via .collect(); fake two
     # cells whose centroids are scalar multiples (same direction → every

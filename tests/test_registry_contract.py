@@ -16,16 +16,21 @@ so the assertion is identical whether or not the driver has written
 this round's record yet. Purely synthetic registries are used where the
 real history adds nothing (test_rotation_next_uses_one_shared_bump)."""
 
+import glob
+import importlib
+import inspect
 import os
 import re
 import sys
 
 import __spark_entry__ as entrymod
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 import rotation_plan
+from check_parity import dtype_mismatches, normalize
 
 GREEN = {"rows_match": True, "schema_match": True, "hash_match": True}
 
@@ -48,6 +53,34 @@ def test_every_query_has_an_oracle_and_vice_versa():
     assert set(q) == set(o), (set(q) ^ set(o))
     assert all(callable(f) for f in q.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in o.values())
+
+
+def test_oracle_order_matches_query_order():
+    """queries() and oracle_sql() are built from the same per-module
+    REGISTRY tables, so they list the same names in the same order."""
+    assert list(entrymod.oracle_sql()) == list(entrymod.queries())
+
+
+def test_every_q_function_is_registered():
+    """Every module-level ``q_*`` function of every query module is in the
+    registry — a query with no registry row (no oracle, never driver-
+    verified) cannot hide in a module."""
+    pkg = os.path.join(REPO, "dataplatform_cdc_pipeline_spark")
+    registered = set(entrymod.queries().values())
+    unregistered = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries*.py"))):
+        mod = importlib.import_module(
+            "dataplatform_cdc_pipeline_spark." + os.path.basename(path)[:-3]
+        )
+        unregistered += [
+            f"{mod.__name__}.{name}"
+            for name, fn in vars(mod).items()
+            if name.startswith("q_")
+            and inspect.isfunction(fn)
+            and fn.__module__ == mod.__name__
+            and fn not in registered
+        ]
+    assert not unregistered
 
 
 #: The 13 §2 CDC core queries lead EVERY driver window (re-verified
@@ -245,3 +278,26 @@ def test_coverage_doc_names_only_real_queries():
     # allow operator/file references like dedup_clusters (also a query) —
     # anything left must be a genuine stale reference
     assert not unknown, f"COVERAGE.md names unknown queries: {sorted(unknown)}"
+
+
+#: Lifecycle queries (index refit/erase, 2PC recovery, DV fold, compaction,
+#: incremental BM25) whose results depend on multi-step operator state —
+#: gated here at the test scale factor in addition to the local sweeps.
+LIFECYCLE_NAMES = [
+    "bm25_index_erasure", "cdc_compact_binpack", "dv_fold_crossover",
+    "incremental_bm25_batch", "ivf_refit_lifecycle", "stream_bm25_index",
+    "stream_compact_runs", "txn_recover_torn",
+]
+
+
+@pytest.mark.parametrize("name", LIFECYCLE_NAMES)
+def test_lifecycle_query_matches_oracle(spark, sf_dir, duck, name):
+    """The driver's Spark-vs-DuckDB parity gate, at the test scale factor
+    (sf0.001 default; SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for
+    the driver's own scale)."""
+    sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
+    odf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert not dtype_mismatches(sdf, odf)  # driver hash is dtype-sensitive
+    assert len(sdf) == len(odf) > 0
+    assert normalize(sdf) == normalize(odf)
