@@ -21,10 +21,9 @@ Scale shape (Lloyd's step on a cluster):
 - Assignment: centroids are an index artifact — k·d integers — collected
   to the driver and shipped to executors in the task closure (MLlib's
   KMeans does the same). One corpus scan per iteration, ZERO shuffles:
-  the default kernel is mapInPandas + numpy int64 (compile-free; the
+  the kernel is mapInPandas + numpy int64 (compile-free; the
   Column-literal alternative measured janino-compile-bound — SCALE.md
-  "k-means formulation race"), with the Column fold kept as the
-  no-Python-workers fallback.
+  "k-means formulation race").
 - Update: each Arrow batch emits k·d partial (cluster, pos, sum, count)
   rows — manual map-side combine — so the only exchange per iteration
   moves k·d-sized partials, not data.
@@ -83,37 +82,6 @@ def seed_centroids(pts: DataFrame, k: int) -> list[tuple[int, list[int]]]:
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
 
 
-def _best_expr(centroids: list[tuple[int, list[int]]]):
-    """struct(dist2, cluster) of the nearest centroid, as ONE map-side
-    row expression: all k exact distances are computed against literal
-    centroid arrays and folded with array_min (struct comparison is
-    lexicographic — (dist2, cluster) IS the tie-break). Assignment
-    therefore needs NO shuffle and NO join; the plan carries k·d integer
-    literals, fine for coarse-quantizer sizes (k·d ≤ ~100k — beyond
-    that, switch to a broadcast join + min_by aggregation)."""
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("cluster"),
-                F.array(*[F.lit(int(x)) for x in m]).alias("m"),
-            )
-            for c, m in centroids
-        ]
-    )
-    dists = F.transform(
-        cent_lit,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("v"), s["m"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dist2"),
-            s["cluster"].alias("cluster"),
-        ),
-    )
-    return F.array_min(dists)
-
-
 def _centroid_arrays(centroids: list[tuple[int, list[int]]]):
     """(cluster ids ascending, (k, d) int64 matrix) — ascending order makes
     numpy argmin's first-match tie-break equal the (dist2, cluster) rule."""
@@ -128,9 +96,9 @@ def _centroid_arrays(centroids: list[tuple[int, list[int]]]):
 def _assign_batches(centroids: list[tuple[int, list[int]]]):
     """mapInPandas kernel: per Arrow batch, the exact (n, k) int64 distance
     matrix and its argmin. Integer arithmetic → bit-identical to the
-    Column formulation and the DuckDB oracle; no generated-code footprint
-    (the Column form bakes k·d literals into janino source, recompiling
-    every iteration — measured compile-bound, see SCALE.md)."""
+    DuckDB oracle; no generated-code footprint (a literal-Column form
+    bakes k·d literals into janino source, recompiling every iteration —
+    measured compile-bound, see SCALE.md)."""
     import numpy as np
 
     ids, mat = _centroid_arrays(centroids)
@@ -156,22 +124,11 @@ def _assign_batches(centroids: list[tuple[int, list[int]]]):
     return fn
 
 
-def assign(
-    pts: DataFrame, centroids: list[tuple[int, list[int]]], use_arrow: bool = True
-) -> DataFrame:
+def assign(pts: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
     """(vec_id, cluster, dist2) — nearest centroid by exact squared
-    distance. Map-only, zero shuffles, in both formulations; Arrow is the
-    default (numpy does the k·d work per batch), the Column form
-    (:func:`_best_expr`) is the no-Python-workers fallback —
-    equivalence-pinned by a unit test."""
-    if use_arrow:
-        return pts.mapInPandas(
-            _assign_batches(centroids), "vec_id long, cluster int, dist2 long"
-        )
-    best = _best_expr(centroids)
-    return pts.select(
-        "vec_id", best["cluster"].alias("cluster"), best["dist2"].alias("dist2")
-    )
+    distance, ties to the lowest cluster id. Map-only, zero shuffles:
+    numpy does the k·d work per Arrow batch."""
+    return pts.mapInPandas(_assign_batches(centroids), "vec_id long, cluster int, dist2 long")
 
 
 def update_centroids(

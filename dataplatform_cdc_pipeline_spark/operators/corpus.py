@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark.functions.hashing import md5_long
 from dataplatform_cdc_pipeline_spark.operators.text_analysis import language_id_expr
-from dataplatform_cdc_pipeline_spark.operators.text_dedup import shingles_expr
 
 
 def sample_slot_expr(id_col: Column | str, salt: str = "sample") -> Column:
@@ -56,9 +55,9 @@ def stratified_sample(
 
 
 def gram_hashes_udf(n: int = 5):
-    """Arrow-batched distinct word n-gram 60-bit hashes — bit-identical to
+    """Arrow-batched distinct word n-gram 60-bit hashes — the values of
     ``transform(array_distinct(shingles_expr(text, n)), md5_long)`` (same
-    split/shingle rules and MD5 window as the other UDF twins) but one
+    split/shingle rules and MD5 window as the other Arrow kernels) in one
     batched pass instead of interpreted array folds."""
     import hashlib
 
@@ -91,7 +90,6 @@ def contamination_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     min_shared: int = 1,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(train_id, bench_id, shared_ngrams): training docs sharing ≥
     ``min_shared`` distinct word ``n``-grams with a held-out benchmark doc
@@ -103,15 +101,9 @@ def contamination_pairs(
     """
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        if use_arrow:
-            hashes = gram_hashes_udf(n)(F.col(text_col))
-        else:
-            hashes = F.transform(
-                F.array_distinct(shingles_expr(text_col, n)), lambda s: md5_long(s)
-            )
         return df.select(
             F.col(id_col).alias(out_id),
-            F.explode(hashes).alias("g"),
+            F.explode(gram_hashes_udf(n)(F.col(text_col))).alias("g"),
         )
 
     t = grams(train, "train_id")
@@ -133,7 +125,6 @@ def cross_corpus_near_pairs(
     k: int = 8,
     bands: int = 4,
     n: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-duplicate screen of a training corpus AGAINST a reference
     corpus (new-crawl-vs-existing-data dedup): MinHash band keys on both
@@ -152,18 +143,12 @@ def cross_corpus_near_pairs(
     from dataplatform_cdc_pipeline_spark.operators.text_dedup import (
         band_keys_expr,
         jaccard_expr,
-        minhash_signature_expr,
         minhash_signature_udf,
         shingle_set_udf,
-        shingles_expr,
     )
 
     def sig_frame(df: DataFrame, out_id: str) -> DataFrame:
-        sig = (
-            minhash_signature_udf(k, n)(F.col(text_col))
-            if use_arrow
-            else minhash_signature_expr(shingles_expr(text_col, n), k)
-        )
+        sig = minhash_signature_udf(k, n)(F.col(text_col))
         return df.select(F.col(id_col).alias(out_id), sig.alias("minhash_sig"))
 
     def band_frame(sigs: DataFrame, out_id: str, label: str) -> DataFrame:
@@ -185,11 +170,7 @@ def cross_corpus_near_pairs(
         .localCheckpoint(eager=True)
     )
 
-    shingle_col = (
-        shingle_set_udf(n)(F.col(text_col))
-        if use_arrow
-        else F.array_distinct(shingles_expr(text_col, n))
-    )
+    shingle_col = shingle_set_udf(n)(F.col(text_col))
 
     def sets_for(df: DataFrame, out_id: str) -> DataFrame:
         ids = cands.select(out_id).distinct().withColumnRenamed(out_id, id_col)

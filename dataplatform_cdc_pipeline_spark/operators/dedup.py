@@ -90,7 +90,7 @@ def latest_per_key_agg(
     previous ``max(struct(ts, pos, carry…))`` compared whole carry
     structs (string comparisons go through the interpreted row ordering)
     and measured 4.5× slower on the sf0.1 CDC feed
-    (scripts/dedup_ab_bench.py: 2.65 s vs 0.58 s warm).
+    (OPTIMIZATION_r12.md §1: 2.65 s vs 0.58 s warm).
 
     Tie behavior at exactly equal (ts, pos): the carry row with the
     LARGEST xxhash64 wins — DETERMINISTIC across partitionings and

@@ -28,7 +28,7 @@ Scale shape:
   codebook is m·k·(d/m) = k·d integers — an index artifact).
 - Encode: ONE corpus scan, ZERO shuffles — the m codebooks ride the
   plan as literals and each row computes its m codes map-side
-  (k·d ≤ ~100k literals, same bound as clustering._best_expr).
+  (k·d ≤ ~100k literals).
 - ADC: the per-query distance table (q·m·k rows — tiny) is broadcast;
   candidates join it map-side and one (query, vec) partial-aggregated
   shuffle sums the m per-subspace entries; top-k is a bounded window.
@@ -105,7 +105,7 @@ def pq_fit(
     # rule seed_centroids applies to each slice); slicing commutes with
     # the elementwise micro-quantization; each subspace's assignment uses
     # its own codebook only (numpy argmin keeps ties on the first —
-    # lowest — code, matching _best_expr's lexicographic struct min); the
+    # lowest — code, matching clustering.assign's (dist2, cluster) rule); the
     # centroid update is the identical floor(Σ/ n) integer mean per
     # (sub, cluster, pos). Equivalence with the kmeans_fit-per-slice loop
     # is pinned by a regression test.

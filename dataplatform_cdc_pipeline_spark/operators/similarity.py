@@ -85,8 +85,8 @@ def vec_stats_udf(signs: list[list[int]]):
     dominant per-row cost of the bucketing stage at any scale.
 
     Bit-exactness: the accumulation loops run SEQUENTIALLY OVER DIMENSIONS
-    (vectorized over rows), i.e. the same left-fold order as the Column
-    twin and DuckDB's ``list_dot_product`` — NOT ``np.dot``, whose
+    (vectorized over rows), i.e. the same left-fold order as those Column
+    helpers and DuckDB's ``list_dot_product`` — NOT ``np.dot``, whose
     pairwise/BLAS summation could flip the sign of near-zero dots and
     re-bucket a vector. Pinned by a differential test.
     """
@@ -384,7 +384,6 @@ def cosine_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = 5000,  # lsh_guard.DEFAULT_MAX_BUCKET
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (a < b, cosine ≥ threshold) found
     within LSH buckets — near-identical vectors land in the same bucket
@@ -396,24 +395,17 @@ def cosine_near_dup_pairs(
     """
     from dataplatform_cdc_pipeline_spark.operators.lsh_guard import cap_buckets
 
-    # materialized once (Arrow fast path by default) for the guard pass and
+    # materialized once (one Arrow pass) for the guard pass and
     # both self-join sides — eager localCheckpoint, not persist(): a persist
     # pins the plan in the SQL cache manager until explicit unpersist, and
     # the returned frame's laziness means no safe unpersist point exists in
     # this function; checkpoint RDDs are ContextCleaner-reclaimed instead
-    signs = hyperplane_signs(planes, dims)
-    if use_arrow:
-        stats = vec_stats_udf(signs)(F.col(vec_col)).alias("__s")
-        vecs = embeddings.select(
-            F.col(id_col), as_double_vec(vec_col).alias("vec"), stats
-        ).select(id_col, "vec", F.col("__s.bucket").alias("bucket"), F.col("__s.nrm").alias("nrm"))
-    else:
-        vecs = (
-            embeddings.select(F.col(id_col), as_double_vec(vec_col).alias("vec"))
-            .withColumn("bucket", lsh_bucket_expr(F.col("vec"), signs))
-            .withColumn("nrm", norm_expr(F.col("vec")))
-        )
-    vecs = vecs.localCheckpoint(eager=True)
+    stats = vec_stats_udf(hyperplane_signs(planes, dims))(F.col(vec_col)).alias("__s")
+    vecs = (
+        embeddings.select(F.col(id_col), as_double_vec(vec_col).alias("vec"), stats)
+        .select(id_col, "vec", F.col("__s.bucket").alias("bucket"), F.col("__s.nrm").alias("nrm"))
+        .localCheckpoint(eager=True)
+    )
     vecs = cap_buckets(vecs, "bucket", max_bucket_size, "embedding-near-dup")
     a, b = vecs.alias("a"), vecs.alias("b")
     return (

@@ -1,10 +1,12 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Beyond-reference surface (BASELINE.json north star): language-ID, quality
-scoring, token counting, document fingerprinting. Everything is native
-Column expressions — JVM-side, codegen-able, zero Python on the hot path —
-so a 100 TB documents table processes at scan speed with full predicate
-pushdown/column pruning.
+scoring, token counting, document fingerprinting. The expressions are
+native Columns — JVM-side, codegen-able — so a 100 TB documents table
+processes at scan speed with full predicate pushdown/column pruning; the
+two per-document frames whose hashing/3-gram folds would run interpreted
+(``text_stats_frame``, ``fingerprint_frame``) are one Arrow-batched pass
+each.
 
 All hashing is MD5-derived (functions/hashing.py) so results are
 reproducible bit-for-bit in any engine (DuckDB oracles).
@@ -15,8 +17,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from dataplatform_cdc_pipeline_spark.functions.hashing import md5_long
 
 # Public common-word profiles for the n-gram/stopword language heuristic.
 # Order matters: deterministic argmax precedence.
@@ -89,24 +89,15 @@ def bpe_token_count_expr(text: Column | str = "text") -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), 0))
 
 
-def text_stats_frame(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", use_arrow: bool = True
-) -> DataFrame:
-    """(id, token/char statistics) — Arrow fast path by default.
+def text_stats_frame(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, token/char statistics) in one Arrow-batched pass.
 
-    The Column formulation is canonical (token_stats_columns, used inside
-    quality_score_expr), but its 3-gram repetition signal evaluates as an
-    interpreted higher-order fold; the Arrow twin computes the identical
-    values (same split/shingle rules as the other UDF twins, floor-scaled
-    doubles are plain IEEE arithmetic in both runtimes) in one batched
-    pass. Pinned bit-identical by a differential test.
+    The values are those of :func:`token_stats_columns` (used inside
+    quality_score_expr) — same split/shingle rules, and floor-scaled
+    doubles are plain IEEE arithmetic in both runtimes — without that
+    form's interpreted higher-order 3-gram fold. The ``text_stats`` query
+    pins them to its DuckDB oracle.
     """
-    if not use_arrow:
-        out = df.select(F.col(id_col), F.col(text_col))
-        for name, col in token_stats_columns(text_col).items():
-            out = out.withColumn(name, col)
-        return out.drop(text_col)
-
     import math
     import re as _re
 
@@ -217,39 +208,13 @@ def language_id_expr(text: Column | str = "text") -> Column:
     return expr.otherwise(F.lit("und"))
 
 
-def fingerprint_columns(text: Column | str = "text") -> dict[str, Column]:
-    """Document fingerprints: full-content MD5, 60-bit integer hash, and a
-    word-window rolling fingerprint (min/max of 3-gram hashes — the
-    winnowing endpoints)."""
-    c = F.col(text) if isinstance(text, str) else text
-    from dataplatform_cdc_pipeline_spark.operators.text_dedup import shingles_expr
-
-    sh = shingles_expr(c, 3)
-    gram_hashes = F.transform(sh, lambda s: md5_long(s))
-    return {
-        "content_md5": F.md5(c),
-        "content_hash64": md5_long(c),
-        "min_gram_hash": F.array_min(gram_hashes),
-        "max_gram_hash": F.array_max(gram_hashes),
-    }
-
-
-def fingerprint_frame(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", use_arrow: bool = True
-) -> DataFrame:
-    """Fingerprint columns for a documents frame.
-
-    ``use_arrow`` computes all four fingerprints in one Arrow-batched pass
-    (hashlib) — bit-identical to the Column expressions but ~5× faster,
-    since MD5-over-shingles in higher-order array functions evaluates
-    interpreted. The Column path remains canonical for composition.
+def fingerprint_frame(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, document fingerprints) in one Arrow-batched hashlib pass:
+    full-content MD5, its 60-bit integer hash (``md5_long``), and a
+    word-window rolling fingerprint (min/max of the 3-gram hashes — the
+    winnowing endpoints). The ``doc_fingerprint`` query pins them to its
+    DuckDB oracle.
     """
-    if not use_arrow:
-        out = df
-        for name, col in fingerprint_columns(text_col).items():
-            out = out.withColumn(name, col)
-        return out
-
     import hashlib
 
     from pyspark.sql import types as T
@@ -326,18 +291,6 @@ def doc_frequency(
         .orderBy(F.col("df").desc(), F.col("token").asc())
         .limit(top)
     )
-
-
-def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column set to a documents frame."""
-    out = df
-    for name, col in token_stats_columns(text_col).items():
-        out = out.withColumn(name, col)
-    out = out.withColumn("quality_score", quality_score_expr(text_col))
-    out = out.withColumn("lang_pred", language_id_expr(text_col))
-    for name, col in fingerprint_columns(text_col).items():
-        out = out.withColumn(name, col)
-    return out
 
 
 def repetition_stats_frame(

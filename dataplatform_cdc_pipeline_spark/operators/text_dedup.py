@@ -49,89 +49,6 @@ def shingles_expr(text: Column | str, n: int = 3) -> Column:
 MAX_LONG = (1 << 63) - 1
 
 
-def minhash_signature_expr(shingles: Column, k: int = DEFAULT_MINHASH_K) -> Column:
-    """Array of k MinHash values in ONE pass over the shingles.
-
-    Families come in FOURS from each salted digest: family f = hex chars
-    ``1 + 8*(f%4) .. +8`` of md5('mh{f//4}|shingle') — four independent
-    32-bit values per digest, so k families cost k/4 MD5 evaluations per
-    shingle (MD5 dominates signature cost; 32-bit family values are ample
-    for banding — a band key still carries r×32 bits). The per-shingle
-    family array feeds a single fold keeping all k running minima (vs k
-    separate array_min traversals).
-    """
-    assert k % 4 == 0, "k must be a multiple of 4 (four families per digest)"
-    digests = F.transform(
-        shingles, lambda s: F.array(*[F.md5(F.concat(F.lit(f"mh{j}|"), s)) for j in range(k // 4)])
-    )
-    fams = F.transform(
-        digests,
-        lambda d: F.array(
-            *[
-                F.conv(F.substring(F.element_at(d, f // 4 + 1), 1 + 8 * (f % 4), 8), 16, 10).cast(
-                    "long"
-                )
-                for f in range(k)
-            ]
-        ),
-    )
-    return F.aggregate(
-        fams,
-        F.array_repeat(F.lit(MAX_LONG), k),
-        lambda acc, arr: F.zip_with(acc, arr, lambda a, b: F.least(a, b)),
-    )
-
-
-def minhash_signatures_jvm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_MINHASH_K,
-    n: int = 3,
-) -> DataFrame:
-    """(id, minhash_sig) via explode + codegen'd md5 columns + min-agg.
-
-    Third physical formulation of the SAME signature math (bit-identical
-    to :func:`minhash_signature_expr` / :func:`minhash_signature_udf`,
-    equivalence-tested): explode shingles to rows, evaluate the k/4 MD5s
-    as PLAIN columns (whole-stage codegen — the higher-order
-    transform/aggregate lambdas of the expr form run interpreted), then
-    ``groupBy(id).min(f0..f{k-1})``. Adds one shuffle the map-only forms
-    don't have, but shingles are partition-local so the partial agg ships
-    exactly one row per doc (id + k longs).
-
-    MEASURED (scripts/minhash_bench.py, sf0.1 + 10×-synthetic, local[32],
-    best of 3): Arrow 1.10 s vs jvm 2.28 s vs expr 2.38 s at 50k docs
-    (sf0.1: 1.49 / 4.39 / 4.66) — the Arrow UDF stays ~2× fastest because
-    hashlib over a per-doc Python *set* of shingles does less MD5 work
-    than codegen'd md5 over exploded duplicate shingles, and pays no
-    shuffle. Decision: ``minhash_dedup_pairs(use_arrow=True)`` remains the
-    default; this form is the no-Python-workers fallback.
-
-    Null/empty text: ``shingles_expr`` yields the single shingle ``['']``
-    for null and empty docs alike (concat_ws over a null slice → ''), so
-    the explode KEEPS those rows and all three formulations agree on the
-    edge — pinned by test_minhash_null_text_equivalence.
-    """
-    assert k % 4 == 0, "k must be a multiple of 4 (four families per digest)"
-    sh = F.explode(shingles_expr(text_col, n)).alias("__sh")
-    ex = df.select(F.col(id_col), sh)
-    fam_cols = []
-    for j in range(k // 4):
-        d = F.md5(F.concat(F.lit(f"mh{j}|"), F.col("__sh")))
-        for q in range(4):
-            fam_cols.append(
-                F.conv(F.substring(d, 1 + 8 * q, 8), 16, 10).cast("long").alias(f"__f{4*j+q}")
-            )
-    mins = [F.min(f"__f{i}").alias(f"__m{i}") for i in range(k)]
-    return (
-        ex.select(F.col(id_col), *fam_cols)
-        .groupBy(id_col)
-        .agg(*mins)
-        .select(F.col(id_col), F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("minhash_sig"))
-    )
-
-
 def band_keys_expr(sig: Column, bands: int = DEFAULT_BANDS, k: int = DEFAULT_MINHASH_K) -> Column:
     """LSH band keys: the signature cut into `bands` slices, each slice
     concatenated into one string key."""
@@ -149,12 +66,20 @@ def band_keys_expr(sig: Column, bands: int = DEFAULT_BANDS, k: int = DEFAULT_MIN
 
 
 def minhash_signature_udf(k: int = DEFAULT_MINHASH_K, n: int = 3):
-    """Arrow-batched MinHash signature — bit-identical to
-    :func:`minhash_signature_expr` but ~1.6× faster: Spark's higher-order
-    array functions evaluate interpreted (no codegen), so at ~50 shingles
-    × k/2 digests per row the Python/hashlib loop over Arrow batches wins.
-    Kept alongside the pure-Column version; both are tested equal.
+    """Arrow-batched MinHash signature of each text's distinct word
+    n-gram shingles.
+
+    Families come in FOURS from each salted digest: family f = hex chars
+    ``1 + 8*(f%4) .. +8`` of md5('mh{f//4}|shingle') — four independent
+    32-bit values per digest, so k families cost k/4 MD5 evaluations per
+    shingle (32-bit family values are ample for banding — a band key
+    still carries r×32 bits). Null and empty texts both hash the single
+    shingle ``''``. The Python/hashlib loop over Arrow batches beat both
+    pure-JVM formulations of the same math by ~2× (SCALE.md, "Measured
+    MinHash signature shoot-out").
     """
+    if k % 4:
+        raise ValueError(f"k must be a multiple of 4 (four families per digest), got {k}")
     import hashlib
 
     from pyspark.sql import types as T
@@ -216,22 +141,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_MINHASH_K,
-    n: int = 3,
-) -> DataFrame:
-    """Attach shingle set + MinHash signature (narrow scan-speed projection)."""
-    sh = shingles_expr(text_col, n)
-    return df.select(
-        F.col(id_col),
-        F.array_distinct(sh).alias("shingle_set"),
-        minhash_signature_expr(sh, k).alias("minhash_sig"),
-    )
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -273,7 +182,6 @@ def minhash_dedup_pairs(
     k: int = DEFAULT_MINHASH_K,
     bands: int = DEFAULT_BANDS,
     n: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """MinHash→LSH→verify: near-duplicate pairs with exact Jaccard ≥
     threshold.
@@ -284,10 +192,7 @@ def minhash_dedup_pairs(
     pairs (semi-join pushback into the corpus scan) — the expensive
     full-text shingling never materializes for the non-duplicate bulk.
     """
-    if use_arrow:
-        sig_col = minhash_signature_udf(k, n)(F.col(text_col))
-    else:
-        sig_col = minhash_signature_expr(shingles_expr(text_col, n), k)
+    sig_col = minhash_signature_udf(k, n)(F.col(text_col))
     # Session hygiene: persist() pins the plan in the SQL cache manager
     # until an explicit unpersist — in a long multi-query session those
     # pins accumulate and decay everything (measured 2.8× across-the-board
@@ -307,13 +212,8 @@ def minhash_dedup_pairs(
         .union(cands.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    shingle_col = (
-        shingle_set_udf(n)(F.col(text_col))
-        if use_arrow
-        else F.array_distinct(shingles_expr(text_col, n))
-    )
     sets_ = df.join(cand_ids, id_col, "left_semi").select(
-        F.col(id_col), shingle_col.alias("shingle_set")
+        F.col(id_col), shingle_set_udf(n)(F.col(text_col)).alias("shingle_set")
     )
     joined = (
         cands.join(sets_.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingle_set", "set_a"), "id_a")
@@ -410,45 +310,13 @@ def dedup_clusters(
     )
 
 
-def simhash_expr(text: Column | str, bits: int = SIMHASH_BITS) -> Column:
-    """60-bit SimHash over word tokens, single pass.
-
-    bit_j(simhash) = 1 iff Σ_tokens (±1 by bit j of the token hash) > 0.
-    One fold over the token array maintains all 60 counters at once
-    (array accumulator), so each token is hashed exactly once — vs the
-    naive 60-aggregates formulation that rehashes per bit.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    words = F.split(F.lower(F.trim(c)), r"\s+")
-    hashes = F.transform(words, lambda w: md5_long(w))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                    .otherwise(F.lit(-1))
-                    .cast("long")
-                    for j in range(bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(F.element_at(counts, j + 1) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        ).cast("long")
-    return out
-
-
 def simhash_udf(bits: int = SIMHASH_BITS):
-    """Arrow-batched SimHash — bit-identical to the Column fold but the
-    (tokens × bits) counter matrix runs vectorized in numpy instead of an
-    interpreted per-token, per-bit lambda."""
+    """Arrow-batched 60-bit SimHash over word tokens.
+
+    bit_j(simhash) = 1 iff Σ_tokens (±1 by bit j of the token's 60-bit MD5
+    hash, ``md5_long``) > 0; the (tokens × bits) counter matrix runs
+    vectorized in numpy, each token hashed once. An empty text hashes the
+    single token ``''``."""
     import hashlib
 
     import numpy as np
@@ -483,38 +351,8 @@ def simhash64(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = SIMHASH_BITS,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    if use_arrow:
-        return df.select(F.col(id_col), simhash_udf(bits)(F.col(text_col)).alias("simhash"))
-    # two-stage select: materialize the counter array once, then assemble
-    # bits from it — keeps the token fold from re-evaluating per bit term
-    c = F.col(text_col)
-    words = F.split(F.lower(F.trim(c)), r"\s+")
-    hashes = F.transform(words, lambda w: md5_long(w))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                    .otherwise(F.lit(-1))
-                    .cast("long")
-                    for j in range(bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    staged = df.select(F.col(id_col), counts.alias("__counts"))
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(F.element_at("__counts", j + 1) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        ).cast("long")
-    return staged.select(F.col(id_col), out.alias("simhash"))
+    return df.select(F.col(id_col), simhash_udf(bits)(F.col(text_col)).alias("simhash"))
 
 
 def simhash_near_pairs(
@@ -634,8 +472,6 @@ def containment_pairs(
     Returns (inner_id, outer_id, shared, inner_sz, containment); the
     inner role goes to the smaller set (tie → lower id).
     """
-    from dataplatform_cdc_pipeline_spark.functions.hashing import md5_long
-
     # ONE shingling pass: the exploded posting list (id, h) feeds sizes,
     # the df-cap, and BOTH sides of the self-join — without the eager
     # checkpoint the expensive shingle+hash scan re-executes per consumer

@@ -1136,7 +1136,7 @@ def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-parallelism floor (r13, guide §2.5/§6): lineitem is one
     # single-row-group file, so the 5×MD5-per-row probe below otherwise
     # evaluates on ONE task (measured 3.4 s → 1.2 s for the probe alone,
-    # scripts/spread_ab_bench.py bloom_probe)
+    # OPTIMIZATION_r13.md §1)
     li = spread_scan(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"

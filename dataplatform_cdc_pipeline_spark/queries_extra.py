@@ -522,7 +522,6 @@ ORDER BY tbl, key
 
 
 _SPLIT = "2024-01-15 00:00:00"
-_ROW_SCHEMA = "tbl string, key string, val long"
 
 
 def q_txn_recover_torn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,7 +548,7 @@ def q_txn_recover_torn(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_changes,
         window_scan,
     )
-    from dataplatform_cdc_pipeline_spark.queries import cdc_feed
+    from dataplatform_cdc_pipeline_spark.queries import _ROW_SCHEMA, cdc_feed
     from dataplatform_cdc_pipeline_spark.sources.cdc import (
         USER_STATE_SCHEMA,
         user_state_config,

@@ -30,7 +30,6 @@ from dataplatform_cdc_pipeline_spark.operators.text_analysis import (
 from dataplatform_cdc_pipeline_spark.operators.text_dedup import (
     exact_dedup,
     minhash_dedup_pairs,
-    simhash64,
     simhash_near_pairs,
 )
 from dataplatform_cdc_pipeline_spark.sources.tables import load_table, spread_scan
@@ -265,7 +264,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # family f: digest = md5('mh{f//4}|' || g), 32-bit window at hex offset
-# 1 + 8*(f%4) (four families per digest — mirrors minhash_signature_expr)
+# 1 + 8*(f%4) (four families per digest — mirrors minhash_signature_udf)
 _MINHASH_FAMILY = (
     "('0x' || substring(md5('mh' || (f // 4)::VARCHAR || '|' || g), "
     "1 + 8 * (f % 4), 8))::BIGINT"
@@ -586,6 +585,23 @@ LIMIT 20
 """
 
 
+def _bm25_phase_rows(phase: int, kind: str, frame: DataFrame) -> DataFrame:
+    """One phase of a BM25 lifecycle query as (phase, kind, doc_id, term,
+    score): 'search' rows carry a doc's score, 'df' rows a term's
+    document frequency."""
+    if kind == "search":
+        return frame.select(
+            F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
+            F.col("doc_id"), F.lit(None).cast("string").alias("term"),
+            F.col("bm25").alias("score"),
+        )
+    return frame.select(
+        F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
+        F.lit(None).cast("long").alias("doc_id"), F.col("term"),
+        F.col("df").cast("double").alias("score"),
+    )
+
+
 def q_incremental_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch lifecycle of the incremental BM25 index + replay + df
     audit. Output rows (phase, kind, doc_id, term, score):
@@ -608,31 +624,18 @@ def q_incremental_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, tempfile.mkdtemp(prefix="bm25_ix_q_") + "/ix"
     )
 
-    def rows(phase: int, kind: str, frame: DataFrame) -> DataFrame:
-        if kind == "search":
-            return frame.select(
-                F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
-                F.col("doc_id"), F.lit(None).cast("string").alias("term"),
-                F.col("bm25").alias("score"),
-            )
-        return frame.select(
-            F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
-            F.lit(None).cast("long").alias("doc_id"), F.col("term"),
-            F.col("df").cast("double").alias("score"),
-        )
-
     idx.add_batch("b0", b0)
     bench_phases.mark("add_b0")
-    p1 = rows(1, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
+    p1 = _bm25_phase_rows(1, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
     bench_phases.mark("search")
     idx.add_batch("b1", b1)
     bench_phases.mark("add_b1")
-    p2 = rows(2, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
+    p2 = _bm25_phase_rows(2, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
     bench_phases.mark("search")
     idx.add_batch("b1", b1)  # replay: rewrites exactly its own partitions
     bench_phases.mark("replay_b1")
-    p3 = rows(3, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
-    audit = rows(3, "df", idx.term_stats(BM25_TERMS))
+    p3 = _bm25_phase_rows(3, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
+    audit = _bm25_phase_rows(3, "df", idx.term_stats(BM25_TERMS))
     return p1.unionByName(p2).unionByName(p3).unionByName(audit)
 
 
@@ -759,25 +762,12 @@ def q_bm25_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx.add_batch("b1", docs.filter(F.col("doc_id") % 2 == 1))
     bench_phases.mark("setup")
 
-    def rows(phase: int, kind: str, frame: DataFrame) -> DataFrame:
-        if kind == "search":
-            return frame.select(
-                F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
-                F.col("doc_id"), F.lit(None).cast("string").alias("term"),
-                F.col("bm25").alias("score"),
-            )
-        return frame.select(
-            F.lit(phase).alias("phase"), F.lit(kind).alias("kind"),
-            F.lit(None).cast("long").alias("doc_id"), F.col("term"),
-            F.col("df").cast("double").alias("score"),
-        )
-
-    p1 = rows(1, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
+    p1 = _bm25_phase_rows(1, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
     bench_phases.mark("search")
     idx.erase(docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"))
     bench_phases.mark("erase")
-    p2 = rows(2, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
-    audit = rows(2, "df", idx.term_stats(BM25_TERMS))
+    p2 = _bm25_phase_rows(2, "search", idx.search(BM25_TERMS)).localCheckpoint(eager=True)
+    audit = _bm25_phase_rows(2, "df", idx.term_stats(BM25_TERMS))
     return p1.unionByName(p2).unionByName(audit)
 
 

@@ -9,16 +9,16 @@ from dataplatform_cdc_pipeline_spark.operators.similarity import (
     lsh_topk,
 )
 from dataplatform_cdc_pipeline_spark.operators.text_analysis import (
-    analyze_documents,
     language_id_expr,
     quality_score_expr,
 )
 from dataplatform_cdc_pipeline_spark.operators.text_dedup import (
     exact_dedup,
     minhash_dedup_pairs,
+    minhash_signature_udf,
+    shingle_set_udf,
     simhash64,
     simhash_near_pairs,
-    with_minhash,
 )
 
 
@@ -51,65 +51,41 @@ def test_minhash_near_dup_detected(spark):
 
 def test_minhash_signature_shape(spark):
     df = docs_df(spark, [(1, "one two three four five")])
-    row = with_minhash(df).first()
+    row = df.select(
+        minhash_signature_udf()(F.col("text")).alias("minhash_sig"),
+        shingle_set_udf()(F.col("text")).alias("shingle_set"),
+    ).first()
     assert len(row["minhash_sig"]) == 8
     assert all(v >= 0 for v in row["minhash_sig"])
     assert len(row["shingle_set"]) == 3  # 5 words → 3 shingles
 
 
-def test_minhash_formulations_bit_identical(spark):
-    """The three physical formulations of the signature (interpreted expr,
-    Arrow UDF, exploded-JVM agg) are the SAME math — bit-identical outputs
-    (scripts/minhash_bench.py measures their speed; this pins equality,
-    including the short-doc single-shingle edge)."""
-    from dataplatform_cdc_pipeline_spark.operators.text_dedup import (
-        minhash_signature_expr,
-        minhash_signature_udf,
-        minhash_signatures_jvm,
-        shingles_expr,
-    )
-    from pyspark.sql import functions as F
-
-    df = docs_df(spark, [(1, "the quick brown fox jumps over the lazy dog"),
-                         (2, "the quick brown fox jumps over a lazy dog"),
-                         (3, "tiny"), (4, "two words")])
-    by_expr = {r["doc_id"]: tuple(r["s"]) for r in df.select(
-        "doc_id", minhash_signature_expr(shingles_expr("text")).alias("s")).collect()}
-    by_arrow = {r["doc_id"]: tuple(r["s"]) for r in df.select(
-        "doc_id", minhash_signature_udf()(F.col("text")).alias("s")).collect()}
-    by_jvm = {r["doc_id"]: tuple(r["minhash_sig"])
-              for r in minhash_signatures_jvm(df).collect()}
-    assert by_expr == by_arrow == by_jvm
-
-
 def test_minhash_null_text_equivalence(spark):
-    """Null and empty text shingle to [''] in every formulation (the JVM
-    explode KEEPS the row — no dropped docs on the edge), and non-multiple-
-    of-4 k fails fast with the same assert in all forms."""
+    """Null and empty text both hash the single shingle '' (no row is
+    dropped, no error), a text shorter than n words is one shingle of all
+    its words, and a k that is not a multiple of 4 is rejected when the
+    UDF is built — the trailing families would otherwise stay MAX_LONG
+    for every document and collide every band built on them."""
+    import hashlib
+
     import pytest
-    from pyspark.sql import functions as F
 
-    from dataplatform_cdc_pipeline_spark.operators.text_dedup import (
-        minhash_signature_expr,
-        minhash_signature_udf,
-        minhash_signatures_jvm,
-        shingles_expr,
-    )
+    def expected(shingles, k=8):
+        # family 4j+q: hex chars 8q..8q+8 of md5('mh{j}|' || shingle)
+        digests = [[hashlib.md5(b"mh%d|" % j + s.encode()).hexdigest() for s in shingles]
+                   for j in range(k // 4)]
+        return [min(int(d[8 * q : 8 * q + 8], 16) for d in digests[j])
+                for j in range(k // 4) for q in range(4)]
 
-    df = spark.createDataFrame([(1, None), (2, ""), (3, "real text here")],
+    df = spark.createDataFrame([(1, None), (2, ""), (3, "real text here"), (4, "Two  words")],
                                "doc_id long, text string")
-    by_expr = {r["doc_id"]: tuple(r["s"]) for r in df.select(
-        "doc_id", minhash_signature_expr(shingles_expr("text"), 8).alias("s")).collect()}
-    by_arrow = {r["doc_id"]: tuple(r["s"]) for r in df.select(
+    sigs = {r["doc_id"]: list(r["s"]) for r in df.select(
         "doc_id", minhash_signature_udf(8)(F.col("text")).alias("s")).collect()}
-    by_jvm = {r["doc_id"]: tuple(r["minhash_sig"])
-              for r in minhash_signatures_jvm(df, k=8).collect()}
-    assert set(by_jvm) == {1, 2, 3}  # null-text row not dropped
-    assert by_expr == by_arrow == by_jvm
-    with pytest.raises(AssertionError, match="multiple of 4"):
-        minhash_signatures_jvm(df, k=6)
-    with pytest.raises(AssertionError, match="multiple of 4"):
-        df.select(minhash_signature_expr(shingles_expr("text"), 6))
+    assert sigs[1] == sigs[2] == expected([""])
+    assert sigs[3] == expected(["real text here"])
+    assert sigs[4] == expected(["two words"])
+    with pytest.raises(ValueError, match="multiple of 4"):
+        minhash_signature_udf(6)
 
 
 def test_simhash_similarity_property(spark):
@@ -137,15 +113,6 @@ def test_quality_and_langid(spark):
     assert q[1] > 0.8 and q[2] < 0.3
     langs = {r["doc_id"]: r["l"] for r in df.select("doc_id", language_id_expr("text").alias("l")).collect()}
     assert langs[1] == "en" and langs[3] == "de" and langs[2] == "und"
-
-
-def test_analyze_documents_on_testdata(spark, sf_dir):
-    from dataplatform_cdc_pipeline_spark.sources.tables import load_table
-
-    out = analyze_documents(load_table(spark, sf_dir, "documents"))
-    row = out.first()
-    assert row["n_tokens"] > 0 and len(row["content_md5"]) == 32
-    assert 0.0 <= row["quality_score"] <= 1.0
 
 
 def test_brute_force_topk_self_similarity(spark):
@@ -217,7 +184,7 @@ def test_bucket_cap_bounds_degenerate_corpus(spark, caplog):
 
     df = docs_df(spark, [(i, "same boilerplate text every time") for i in range(1000)]
                  + [(2000, "unique text one here"), (2001, "unique text one here")])
-    sigs = with_minhash(df)
+    sigs = df.select("doc_id", minhash_signature_udf()(F.col("text")).alias("minhash_sig"))
     with caplog.at_level(logging.WARNING, logger="dataplatform_cdc_pipeline_spark.lsh_guard"):
         capped = lsh_candidate_pairs(sigs, max_bucket_size=100).collect()
     # the 1000-doc bucket is gone; the small duplicate pair survives
@@ -273,15 +240,6 @@ def test_vec_stats_udf_matches_column_twin(spark, sf_dir):
         (F.col("u.bucket") != F.col("cb")) | (F.col("u.nrm") != F.col("cn"))
     ).count()
     assert bad == 0
-
-
-def test_cosine_near_dup_arrow_column_equivalence(spark, sf_dir):
-    from dataplatform_cdc_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(500)
-    a = {tuple(r) for r in cosine_near_dup_pairs(emb, threshold=0.4, use_arrow=True).collect()}
-    b = {tuple(r) for r in cosine_near_dup_pairs(emb, threshold=0.4, use_arrow=False).collect()}
-    assert a == b
 
 
 def test_corpus_sample_deterministic_and_stratified(spark, sf_dir):
@@ -365,32 +323,6 @@ def test_ivf_topk_multi_equals_single_probe_runs(spark, sf_dir):
             for r in ivf_topk(emb, qs, k=5, nprobe=np_, centroids=cents).collect()
         }
         assert by_np[np_] == single, f"nprobe={np_}"
-
-
-def test_text_stats_arrow_column_equivalence(spark, sf_dir):
-    """The Arrow text-stats fast path must be value-identical to the
-    canonical Column formulation (floor-scaled doubles included)."""
-    from dataplatform_cdc_pipeline_spark.operators.text_analysis import text_stats_frame
-    from dataplatform_cdc_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(300)
-    cols = ["doc_id", "n_tokens", "n_chars_measured", "rep_ratio",
-            "avg_token_len", "punct_count", "digit_count", "stopword_count"]
-    a = sorted(tuple(r) for r in text_stats_frame(docs, use_arrow=True).select(cols).collect())
-    b = sorted(tuple(r) for r in text_stats_frame(docs, use_arrow=False).select(cols).collect())
-    assert a == b
-
-
-def test_contamination_arrow_column_equivalence(spark, sf_dir):
-    from dataplatform_cdc_pipeline_spark.operators.corpus import contamination_pairs
-    from dataplatform_cdc_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(300)
-    bench = docs.filter("doc_id % 20 = 0")
-    train = docs.filter("doc_id % 20 != 0")
-    a = sorted(tuple(r) for r in contamination_pairs(train, bench, use_arrow=True).collect())
-    b = sorted(tuple(r) for r in contamination_pairs(train, bench, use_arrow=False).collect())
-    assert a == b
 
 
 def test_repetition_stats_edges(spark):
@@ -660,24 +592,6 @@ def test_kmeans_floor_centroid_negative_means(spark):
     cents = update_centroids(pts, [(0, [0, 0])])
     # mean of -2 and -3 micro = -2.5 -> floor = -3 (NOT trunc's -2)
     assert cents == [(0, [-3, 0])]
-
-
-def test_kmeans_assign_arrow_column_equivalence(spark, sf_dir):
-    """Arrow (numpy int64) and Column (literal-fold) assignment must be
-    bit-identical — same exact arithmetic, same (dist2, cluster)
-    tie-break."""
-    from dataplatform_cdc_pipeline_spark.operators.clustering import (
-        assign,
-        quantized_points,
-        seed_centroids,
-    )
-    from dataplatform_cdc_pipeline_spark.sources.tables import load_table
-
-    pts = quantized_points(load_table(spark, sf_dir, "embeddings"))
-    cents = seed_centroids(pts, 4)
-    a = sorted(map(tuple, assign(pts, cents, use_arrow=True).collect()))
-    b = sorted(map(tuple, assign(pts, cents, use_arrow=False).collect()))
-    assert a == b
 
 
 def test_semantic_dedup_prunes_within_cell_only(spark):

@@ -46,14 +46,12 @@ def test_dedup_has_single_shuffle(spark, sf_dir):
     from dataplatform_cdc_pipeline_spark.sources.tables import load_table
 
     raw = synthesize_cdc_from_events(load_table(spark, sf_dir, "events"))
-    for strategy in ("agg", "window"):
-        cfg = user_state_config(dedup_strategy=strategy)
-        ch = build_changes(window_scan(raw, cfg, None, None), USER_STATE_SCHEMA, cfg, True)
-        simple = ch._jdf.queryExecution().executedPlan().toString()
-        assert simple.count("Exchange") <= 2, strategy
-        if strategy == "agg":
-            # map-side partial aggregation before the shuffle
-            assert "partial_max" in simple or "HashAggregate" in simple
+    cfg = user_state_config()
+    ch = build_changes(window_scan(raw, cfg, None, None), USER_STATE_SCHEMA, cfg, True)
+    simple = ch._jdf.queryExecution().executedPlan().toString()
+    assert simple.count("Exchange") <= 2
+    # map-side partial aggregation before the shuffle
+    assert "partial_max" in simple or "HashAggregate" in simple
 
 
 def test_dedup_window_grouplimit_partial(spark):

@@ -283,14 +283,20 @@ def test_coverage_doc_names_only_real_queries():
 #: Lifecycle queries (index refit/erase, 2PC recovery, DV fold, compaction,
 #: incremental BM25) whose results depend on multi-step operator state —
 #: gated here at the test scale factor in addition to the local sweeps.
-LIFECYCLE_NAMES = [
+# queries whose operators have no other differential reference in the
+# suite: the index/compaction lifecycles, and the queries that run the
+# Arrow kernel of each LLM operator (its only implementation)
+PARITY_NAMES = [
     "bm25_index_erasure", "cdc_compact_binpack", "dv_fold_crossover",
     "incremental_bm25_batch", "ivf_refit_lifecycle", "stream_bm25_index",
     "stream_compact_runs", "txn_recover_torn",
+    "text_stats", "doc_fingerprint", "dedup_minhash_lsh", "dedup_simhash",
+    "cross_corpus_dedup", "contamination_check", "embedding_near_dup",
+    "embedding_kmeans",
 ]
 
 
-@pytest.mark.parametrize("name", LIFECYCLE_NAMES)
+@pytest.mark.parametrize("name", PARITY_NAMES)
 def test_lifecycle_query_matches_oracle(spark, sf_dir, duck, name):
     """The driver's Spark-vs-DuckDB parity gate, at the test scale factor
     (sf0.001 default; SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for

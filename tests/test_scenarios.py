@@ -137,6 +137,18 @@ def test_two_stream_equivalence(spark):
     _, t_fidelity, _ = merge(spark, rows, two_stream_fidelity=True)
     assert state(t_unified) == state(t_fidelity) == [(1, 2.0), (4, 44.0)]
 
+    # many keys, 1-7 events each, deletes scattered through the history:
+    # the aggregate dedup (unified) and the ranked window (two-stream) agree
+    rows, pos = [], 0
+    for uid in range(1, 30):
+        for j in range(uid % 7 + 1):
+            pos += 1
+            op = "d" if (uid + j) % 11 == 0 else ("c" if j == 0 else "u")
+            rows.append((op, pos * 10, pos, uid, float(pos)))
+    _, t_unified, _ = merge(spark, rows)
+    _, t_fidelity, _ = merge(spark, rows, two_stream_fidelity=True)
+    assert state(t_unified) == state(t_fidelity)
+
 
 # S1: config-table lookup (point SELECT … LIMIT 1, step-5.sql:91-131)
 def test_config_table_lookup(spark, tmp_path):
@@ -227,20 +239,6 @@ def test_audit_compaction(spark):
     assert files_after < files_before and files_after == 1
     assert sorted((r["id"], r["run_status"]) for r in audit.history().collect()) == before_rows
     assert audit.read_watermark(cfg.cdc_table, cfg.target_table) == wm_before
-
-
-# physical dedup strategies agree: agg (map-side combine) vs window (ranked)
-def test_dedup_strategy_equivalence(spark):
-    rows = []
-    pos = 0
-    for uid in range(1, 30):
-        for j in range(uid % 7 + 1):  # varying updates per key
-            pos += 1
-            op = "d" if (uid + j) % 11 == 0 else ("c" if j == 0 else "u")
-            rows.append((op, pos * 10, pos, uid, float(pos)))
-    _, t_agg, _ = merge(spark, rows, dedup_strategy="agg")
-    _, t_win, _ = merge(spark, rows, dedup_strategy="window")
-    assert state(t_agg) == state(t_win)
 
 
 # S1 via parquet-format config table
