@@ -55,9 +55,10 @@ def bloom_build(
     ``m_bits=None`` auto-sizes to the next power of two ≥ 16 bits per
     distinct key (fp ≈ 0.1% at k=5) — an under-sized filter silently
     degrades to a pass-through (measured: 21k keys in the 64 Ki-bit
-    default saturate to a 33% fp rate, scripts/prune_bench.py), so
-    production callers with unknown dim cardinality should auto-size;
-    the count it costs is over the (small) dim side only."""
+    default saturate to a 33% fp rate, SCALE.md "Bloom semi-join
+    pruning"), so production callers with unknown dim cardinality
+    should auto-size; the count it costs is over the (small) dim side
+    only."""
     if m_bits is None:
         n = keys.select(key_col).distinct().count()
         m_bits = max(1 << 13, 1 << (max(n, 1) * 16 - 1).bit_length())
@@ -98,7 +99,7 @@ def bloom_might_contain(
     """Membership predicate: true iff every one of the key's k bits is
     set. Inlines the word array as a literal — a pure scan-side filter
     expression (no join, no shuffle). Probe cost measured at sf0.1
-    (600k cached rows, scripts/prune_bench.py micro variant): ~2.8 s
+    (600k cached rows, SCALE.md "Bloom semi-join pruning"): ~2.8 s
     over the 5×md5 baseline even at 512 Ki bits; a hex-string-literal
     + substring/conv formulation was built, raced, and rejected (~9×
     slower — conv leaves codegen). NULL keys probe like any value (md5

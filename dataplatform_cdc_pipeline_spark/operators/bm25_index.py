@@ -157,15 +157,13 @@ class IncrementalBm25Index:
         Scale shape: affected batches resolve from the skinny doclens
         table pruned by the erased-id join — never a postings scan;
         only those batches' partitions rewrite (delta-cost, like every
-        other maintenance op here). Batches emptied entirely have their
-        partition directories removed (dynamic overwrite only replaces
-        partitions PRESENT in the written frame). Idempotent: a replay
+        other maintenance op here), emptied ones removed
+        (``replace_partitions``). Idempotent: a replay
         finds no surviving rows for the ids and rewrites the same
         partitions identically."""
-        import shutil
-
         from dataplatform_cdc_pipeline_spark.operators.index_io import (
             coerce_id_frame,
+            replace_partitions,
         )
 
         ids = coerce_id_frame(self.spark, doc_ids, "doc_id")
@@ -183,8 +181,7 @@ class IncrementalBm25Index:
             return result
         bpred = F.col("batch").isin(affected)
 
-        # materialize the survivors BEFORE any overwrite — the new
-        # frames read the very partitions the writes replace
+        # materialized: replace_partitions' frames must not read the index
         keep_lens = (
             doclens.filter(bpred)
             .join(ids, "doc_id", "left_anti")
@@ -215,21 +212,9 @@ class IncrementalBm25Index:
             ("doclens", keep_lens, ["doc_id", "dl", "batch"]),
             ("docstats", new_stats, ["n_docs", "n_dl", "sum_dl", "batch"]),
         ):
-            present = {
-                r["batch"] for r in frame.select("batch").distinct().collect()
-            }
-            (
-                frame.select(*cols)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(os.path.join(self.path, sub))
+            replace_partitions(
+                frame.select(*cols), os.path.join(self.path, sub), ["batch"], affected
             )
-            for b in set(affected) - present:  # emptied partitions
-                shutil.rmtree(
-                    os.path.join(self.path, sub, f"batch={b}"),
-                    ignore_errors=True,
-                )
         return result
 
     def compact_segments(self, batch_ids: Sequence[str] | None = None) -> dict:
@@ -260,7 +245,10 @@ class IncrementalBm25Index:
         (including prior segments — re-compacting is legitimate and
         idempotent)."""
         import hashlib
-        import shutil
+
+        from dataplatform_cdc_pipeline_spark.operators.index_io import (
+            replace_partitions,
+        )
 
         current = sorted(
             r["batch"]
@@ -287,8 +275,7 @@ class IncrementalBm25Index:
             return result
         bpred = F.col("batch").isin(present + [seg])
 
-        # key-deduplicated survivors (materialized BEFORE any overwrite:
-        # the new frames read the very partitions the writes replace)
+        # key-deduplicated survivors, materialized: the frames must not read the index
         doclens = (
             self._read("doclens", _DOCLENS_SCHEMA)
             .filter(bpred)
@@ -316,18 +303,14 @@ class IncrementalBm25Index:
             ("doclens", doclens),
             ("docstats", stats),
         ):
-            (
-                frame.withColumn("batch", F.lit(seg))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(os.path.join(self.path, sub))
+            # the frame holds only the segment, so the merged batches
+            # (present) are the partitions it retires
+            replace_partitions(
+                frame.withColumn("batch", F.lit(seg)),
+                os.path.join(self.path, sub),
+                ["batch"],
+                present + [seg],
             )
-            for b in present:  # retire the merged partitions
-                shutil.rmtree(
-                    os.path.join(self.path, sub, f"batch={b}"),
-                    ignore_errors=True,
-                )
         return result
 
     def _read(self, sub: str, schema: str) -> DataFrame:

@@ -152,16 +152,13 @@ class IncrementalLshIndex:
         (band_key, doc_id) scan itself joined to the broadcast id set —
         the index IS its own skinny membership table (2 columns,
         ``bands`` rows per doc, the same row class as BM25's doclens);
-        only those batch partitions rewrite. Emptied partitions'
-        directories are removed (dynamic overwrite only replaces
-        partitions PRESENT in the written frame). Idempotent: a replay
+        only those batch partitions rewrite (``replace_partitions``
+        also removes the emptied ones). Idempotent: a replay
         finds no surviving rows for the ids and rewrites the same
         partitions identically."""
-        import os
-        import shutil
-
         from dataplatform_cdc_pipeline_spark.operators.index_io import (
             coerce_id_frame,
+            replace_partitions,
         )
 
         ids = coerce_id_frame(self.spark, doc_ids, "doc_id")
@@ -179,8 +176,7 @@ class IncrementalLshIndex:
             return result
         bpred = F.col("batch").isin(affected)
 
-        # materialize survivors BEFORE the overwrite — the new frame
-        # reads the very partitions the write replaces
+        # materialized: replace_partitions' frame must not read the index
         keep = (
             index.filter(bpred)
             .join(ids, "doc_id", "left_anti")
@@ -190,21 +186,12 @@ class IncrementalLshIndex:
             index.filter(bpred).join(ids, "doc_id")
             .select("doc_id").distinct().count()
         )
-        (
-            keep.select("band_key", "doc_id", "batch")
-            .repartition("band_key")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(self.path)
+        replace_partitions(
+            keep.select("band_key", "doc_id", "batch").repartition("band_key"),
+            self.path,
+            ["batch"],
+            affected,
         )
-        present = {
-            r["batch"] for r in keep.select("batch").distinct().collect()
-        }
-        for b in set(affected) - present:  # emptied partitions
-            shutil.rmtree(
-                os.path.join(self.path, f"batch={b}"), ignore_errors=True
-            )
         return result
 
     # -- incremental dedup ---------------------------------------------------

@@ -40,10 +40,10 @@ Scope notes (documented limits, tested where they bite):
   OUTSIDE the optimistic version counter — concurrent delete-only
   writers to the same bucket can lose tombstones (run one writer per
   target, as the base class already prescribes for the swap race);
-- a crash between the upsert swap and the tombstone clear can leave a
-  fresh upsert masked; replaying the merge window (the engine's
-  standard crash recovery) rewrites the bucket and clears the mask —
-  reconvergence is test-pinned;
+- the upsert swap rolls forward after a crash like every bucket-sink
+  commit; a crash AFTER it but before the tombstone clear can leave a
+  fresh upsert masked, and replaying the merge window (the watermark has
+  not moved) rewrites the bucket and clears the mask — test-pinned;
 - ``cfg.soft_delete`` is refused: tombstone-as-mask and
   tombstone-as-row are contradictory delete representations.
 """
@@ -195,6 +195,7 @@ class DvMergeTarget(ParquetMergeTarget):
             resolve_changes,
         )
 
+        self._roll_forward()  # the masked read below must see a whole swap
         self._enforce_changes_schema(changes)
         pk = list(self.cfg.pk)
         n = self.cfg.n_buckets

@@ -308,14 +308,12 @@ class IncrementalIvfIndex:
         Scale shape: affected (batch, cell) partitions resolve from a
         column-pruned scan (vec_id/batch/cell only — parquet never
         reads the wide codes column) joined to the broadcast id set;
-        only those partitions rewrite. Emptied partitions' directories
-        are removed (dynamic overwrite only replaces partitions PRESENT
-        in the written frame). Idempotent: a replay finds no surviving
+        only those partitions rewrite, emptied ones removed
+        (``replace_partitions``). Idempotent: a replay finds no surviving
         rows for the ids and rewrites the same partitions identically."""
-        import shutil
-
         from dataplatform_cdc_pipeline_spark.operators.index_io import (
             coerce_id_frame,
+            replace_partitions,
         )
 
         ids = coerce_id_frame(self.spark, vec_ids, "vec_id")
@@ -349,8 +347,7 @@ class IncrementalIvfIndex:
                 F.broadcast(pairs), ["batch", "cell"], "left_semi"
             )
 
-        # materialize survivors BEFORE the overwrite — the new frame
-        # reads the very partitions the write replaces
+        # materialized: replace_partitions' frame must not read the index
         keep = (
             scoped(rows)
             .join(ids, "vec_id", "left_anti")
@@ -360,23 +357,12 @@ class IncrementalIvfIndex:
             scoped(rows).join(ids, "vec_id")
             .select("vec_id").distinct().count()
         )
-        (
-            keep.select("vec_id", "codes", "batch", "cell")
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "cell")
-            .parquet(self.rows_path)
+        replace_partitions(
+            keep.select("vec_id", "codes", "batch", "cell").repartition("cell"),
+            self.rows_path,
+            ["batch", "cell"],
+            affected,
         )
-        present = {
-            (r["batch"], r["cell"])
-            for r in keep.select("batch", "cell").distinct().collect()
-        }
-        for b, c in set(affected) - present:  # emptied partitions
-            shutil.rmtree(
-                os.path.join(self.rows_path, f"batch={b}", f"cell={c}"),
-                ignore_errors=True,
-            )
         return result
 
     # -- probe ------------------------------------------------------------------

@@ -13,7 +13,8 @@ and SCD2 subclasses.
   ONLY those bucket partitions (partition pruning — the Spark analogue of
   the reference's explicit day-of-year ``PARTITION (pNNN)`` list,
   step-8:352-377), resolves changes with one co-partitioned full-outer
-  join, and atomically swaps just the affected bucket directories.
+  join, and swaps just the affected bucket directories through one
+  journaled, roll-forward publish (``index_io.publish_dirs``).
 
 100 TB posture: a change batch touching k of N buckets rewrites k/N of the
 table; bucket count scales with table size (pick N so a bucket ≈ 1-4 GB).
@@ -25,18 +26,19 @@ is large.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import shutil
 import uuid
-
-logger = logging.getLogger("dataplatform_cdc_pipeline_spark.merge_target")
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataplatform_cdc_pipeline_spark.config import MergeConfig
+from dataplatform_cdc_pipeline_spark.operators.index_io import (
+    publish_dirs,
+    roll_forward,
+)
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this merge's read and its commit —
@@ -190,7 +192,12 @@ class ParquetMergeTarget:
       (merge.sql:360-366 — counts feed the audit row, the window feeds the
       watermark);
     - ``pending_commit()`` is None on a cleanly-committed target and the
-      commit manifest after a crash mid-swap.
+      commit journal after a crash mid-swap, until the next writer rolls
+      that swap forward.
+
+    Readers are not table-atomic (the snapshot sink is): mid-swap a
+    reader can see some buckets old and some new, and a bucket absent
+    between its two renames (after a crash there, until the next write).
     """
 
     def __init__(self, spark: SparkSession, path: str, cfg: MergeConfig, schema: T.StructType):
@@ -387,21 +394,11 @@ class ParquetMergeTarget:
         pk = list(self.cfg.pk)
         n = self.cfg.n_buckets
         data_cols = [f.name for f in self.schema.fields]
+        self._roll_forward()
         # optimistic concurrency (Delta's transaction-log conflict check,
         # emulated): remember the committed version this merge reads from;
         # _commit refuses the swap if another writer advanced it since
         v0 = self._read_version()
-
-        pending = self.pending_commit()
-        if pending:
-            logger.warning(
-                "target %s has a commit manifest from a crashed mid-swap commit "
-                "(staging=%s, buckets=%s); this merge re-applies the window and "
-                "reconverges the target",
-                self.path,
-                pending.get("staging"),
-                pending.get("buckets"),
-            )
 
         s = changes.withColumn(BUCKET_COL, bucket_expr(pk, n))
         s.cache()
@@ -469,22 +466,19 @@ class ParquetMergeTarget:
                 return int(f.read().strip() or 0)
         return 0
 
-    def _write_version(self, v: int) -> None:
-        with open(os.path.join(self.path, self.VERSION), "w") as f:
-            f.write(str(v))
-
     def pending_commit(self) -> dict | None:
-        """Manifest left by a commit that crashed mid-swap, else None.
-
-        The watermark only advances on success, so re-running the window
-        reconverges the target; the manifest makes the torn state
-        *detectable* instead of silent.
-        """
+        """Journal left by a commit that crashed mid-swap, else None.
+        The next writer rolls that swap forward (:meth:`_roll_forward`)."""
         p = os.path.join(self.path, self.MANIFEST)
         if os.path.isfile(p):
             with open(p) as f:
                 return json.load(f)
         return None
+
+    def _roll_forward(self) -> None:
+        """Finish a swap a crashed commit left journaled; every writer
+        runs this before it reads the version."""
+        roll_forward(os.path.join(self.path, self.MANIFEST))
 
     def _commit(
         self,
@@ -493,14 +487,14 @@ class ParquetMergeTarget:
         expected_version: int | None = None,
         sort_exprs: list | None = None,
     ) -> None:
-        """Write affected buckets to staging, then swap directories.
-
-        Emulates the reference's transaction (merge.sql:368-457): readers see
-        either the old or the new bucket. A commit manifest (staging id +
-        affected buckets) is written before the first swap and removed after
-        the last, so a mid-swap crash is detectable (``pending_commit``) and
-        replayable (the snapshot sink publishes through one manifest link
-        instead).
+        """Write affected buckets to a sibling staging tree, then swap
+        them in with :func:`index_io.publish_dirs` — the stand-in for the
+        reference's transaction (merge.sql:368-457). A crash after its
+        journal exists is rolled forward by the next writer; a failure
+        before it (staging write, pre-commit hook, version check)
+        reclaims the staging tree at once and leaves the target as it
+        was. The snapshot sink publishes through one manifest link
+        instead.
 
         A pending transactional-audit payload fails loudly here: the
         per-bucket swap has no single publish to attach it to (use the
@@ -544,36 +538,27 @@ class ParquetMergeTarget:
             )
         try:
             merged.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
-        except BaseException:
-            # a failed staging write leaves a partial, never-referenced
-            # tree — reclaim it now instead of waiting for vacuum()
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        try:
             if self.pre_commit_hook is not None:
                 self.pre_commit_hook()
-            if expected_version is not None and self._read_version() != expected_version:
+            v = self._read_version()
+            if expected_version is not None and v != expected_version:
                 raise ConcurrentWriteError(
                     f"target {self.path} advanced from version {expected_version} "
-                    f"to {self._read_version()} since this merge read it; "
+                    f"to {v} since this merge read it; "
                     "replay the window against the new state"
                 )
             os.makedirs(self.path, exist_ok=True)
-            manifest = os.path.join(self.path, self.MANIFEST)
-            with open(manifest, "w") as f:
-                json.dump({"staging": staging, "buckets": affected}, f)
-            for b in affected:
-                src = os.path.join(staging, f"{BUCKET_COL}={b}")
-                dst = os.path.join(self.path, f"{BUCKET_COL}={b}")
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                if os.path.isdir(src):
-                    shutil.move(src, dst)
-                # else: bucket emptied by deletes — old dir already removed
-            self._write_version(self._read_version() + 1)
-            os.remove(manifest)  # swap complete — commit is clean
-        finally:
+        except BaseException:
+            # nothing references the staged tree yet — reclaim it now
+            # instead of waiting for vacuum()
             shutil.rmtree(staging, ignore_errors=True)
+            raise
+        names = [f"{BUCKET_COL}={b}" for b in affected]
+        publish_dirs(
+            os.path.join(self.path, self.MANIFEST), staging,
+            [(name, os.path.join(self.path, name)) for name in names],
+            os.path.join(self.path, self.VERSION), v + 1,
+        )
 
     # -- maintenance ---------------------------------------------------------
 
@@ -598,23 +583,20 @@ class ParquetMergeTarget:
         — and an over-bucketed small table (N tiny files) shrinks back.
         ``compact()`` redistributes every row under the CURRENT config's
         bucket function; subsequent bucket-pruned reads/merges use the same
-        function and stay consistent. Returns rows rewritten. Readers keep
-        bucket-level atomicity: each directory is swapped whole,
-        crash-detectable via the same commit manifest.
+        function and stay consistent. Returns rows rewritten; the rewrite
+        publishes through the merge's journaled swap.
         """
+        self._roll_forward()
         if not self.exists():
             return 0
         v0 = self._read_version()
         current = self.read()
         n = current.count()
-        # swap set = live old layout ∪ every possible new bucket id: when
-        # re-bucketing, a staged bucket with no same-id predecessor must
-        # still be moved in (and an emptied old bucket retired) — covering
-        # range(n_buckets) costs only no-op loop iterations. Live-bucket
-        # discovery is a per-sink hook: the swap sink lists directories,
-        # the snapshot sink asks its manifest — deriving it from listdir
-        # here would miss a shrinking re-bucket's high manifest entries
-        # (old ids ≥ new N would carry forward as duplicates).
+        # swap set = live old layout ∪ every new bucket id, so a
+        # re-bucketing compact moves in staged buckets with no same-id
+        # predecessor and retires emptied old ones. _live_buckets is a
+        # per-sink hook: the snapshot sink reads its manifest, since a
+        # listing would miss a shrinking re-bucket's high entries.
         all_buckets = sorted(self._live_buckets() | set(range(self.cfg.n_buckets)))
         merged = current.withColumn(BUCKET_COL, bucket_expr(list(self.cfg.pk), self.cfg.n_buckets))
         if self.cfg.partition_field:
@@ -661,6 +643,7 @@ class ParquetMergeTarget:
         deliberately destroyed. Tags pinning old versions must be
         deleted first or vacuum will (correctly) refuse to reclaim them.
         """
+        self._roll_forward()
         pk = list(self.cfg.pk)
         n = self.cfg.n_buckets
         v0 = self._read_version()
@@ -695,15 +678,12 @@ class ParquetMergeTarget:
         return n_erased
 
     def vacuum(self) -> list[str]:
-        """Remove orphaned staging directories left by crashed commits.
-
-        A crash AFTER the staged write but BEFORE/DURING the swap leaves
-        ``<path>.staging-*`` trees (the finally-cleanup never ran). They
-        are invisible to readers (outside the target directory) but hold
-        disk; any staging dir named by a live commit manifest is kept (the
-        manifest is evidence the swap may still be replayed/diagnosed).
-        Returns the removed paths.
-        """
+        """Remove orphaned ``<path>.staging-*`` trees: a process killed
+        during the staged write, or between the publish's journal removal
+        and its staging-tree deletion, leaves one that nothing references
+        (invisible to readers, but holding disk). The tree a pending
+        journal names is kept for the next writer's roll-forward. Returns
+        the removed paths."""
         pending = self.pending_commit()
         keep = {pending["staging"]} if pending else set()
         parent, base = os.path.split(self.path.rstrip("/"))

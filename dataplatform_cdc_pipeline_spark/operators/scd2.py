@@ -23,7 +23,7 @@ Two layers:
   key), no joins, no state. This is also the DuckDB-oracle shape.
 - :class:`Scd2Target` — the incremental sink: bucketed-parquet history
   reusing ParquetMergeTarget's staged-commit machinery (bucket pruning,
-  atomic swaps, crash manifests, schema drift, compaction). A batch
+  the journaled roll-forward bucket swap, schema drift, compaction). A batch
   touches only the buckets its keys hash to; inside them, open versions
   close and the batch's own mini-history appends.
 
@@ -187,7 +187,7 @@ class Scd2Target(ParquetMergeTarget):
     """Bucketed-parquet SCD2 history table.
 
     Reuses the whole ParquetMergeTarget storage stack — bucket layout,
-    pruned reads, staged atomic commits, crash manifests, optimistic
+    pruned reads, the journaled roll-forward bucket swap, optimistic
     version check, compact()/vacuum(), schema drift policies — and
     replaces the Type-1 resolve with the Type-2 close-and-append. The
     change-set contract differs from :class:`ParquetMergeTarget` in one way:
@@ -231,8 +231,9 @@ class Scd2Target(ParquetMergeTarget):
 
     def merge(self, changes: DataFrame) -> dict[str, int]:
         """Apply one in-order event batch: close affected keys' open
-        versions, append the batch's versions — atomically, touching only
-        the buckets the batch's keys hash to."""
+        versions, append the batch's versions — one journaled bucket swap
+        touching only the buckets the batch's keys hash to."""
+        self._roll_forward()
         self._enforce_changes_schema(changes)
         pk = list(self.cfg.pk)
         n = self.cfg.n_buckets

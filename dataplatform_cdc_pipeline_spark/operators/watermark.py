@@ -30,51 +30,42 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataplatform_cdc_pipeline_spark.operators.index_io import (
+    publish_dirs,
+    roll_forward,
+)
+
 EPOCH = datetime.datetime(1970, 1, 1)
 
 
 def one_row_df(spark: SparkSession, schema: T.StructType, values: dict) -> DataFrame:
-    """One-row DataFrame from Python scalars as a PURE-JVM plan.
-
-    ``createDataFrame`` parks the row in a Python-backed local relation, so
-    every job over it (even a 1-row audit append) spins a Python worker —
-    measured 5-6 s per append at local[32]. ``range(1).select(lit(...))``
-    keeps the row entirely JVM-side: ~0.3 s per append, 17×.
-    """
+    """One-row DataFrame from Python scalars as a PURE-JVM plan:
+    ``range(1).select(lit(...))`` spins no Python worker, where a
+    ``createDataFrame`` row did (5-6 s vs ~0.3 s per job at local[32])."""
     cols = [F.lit(values.get(f.name)).cast(f.dataType).alias(f.name) for f in schema.fields]
     return spark.range(1).select(*cols)
 
 
 def append_row_parquet(path: str, schema: T.StructType, values: dict) -> None:
     """Append ONE audit row by writing a parquet file DIRECTLY with
-    pyarrow — no Spark job at all (r12 optimization, guide §5: the driver
-    appending a single metadata row should not schedule distributed work).
+    pyarrow — no Spark job. The Spark write it replaces
+    (``one_row_df(...).coalesce(1).write``) measured 0.3-0.4 s per append
+    at local[32], two appends per merge; this is ~10 ms. Spark's audit
+    readers supply the read schema, and timestamps round-trip
+    value-identically (regression-tested). The physical encodings DIFFER:
+    Spark writes INT96 timestamps here, this path int64 micros tz=UTC;
+    Spark's reader decodes both and ``read_watermark`` normalizes both, so
+    keep both normalizations.
 
-    The Spark write this replaces (``one_row_df(...).coalesce(1).write``)
-    costs a full job — scheduler round-trip, task launch, commit protocol
-    — measured 0.3-0.4 s per append at local[32]; two appends per merge,
-    every micro-batch of every streaming drain. The direct write is ~10 ms
-    and produces a table every reader sees identically: Spark's audit
-    readers supply the read schema explicitly (``spark.read.schema(...)``)
-    and timestamps round-trip value-identically (pinned by a regression
-    test). NOTE the physical encodings DIFFER: this Spark install writes
-    parquet timestamps as INT96 (``spark.sql.parquet.outputTimestampType``
-    default), while this path writes int64 micros tz=UTC — mixed-writer
-    stores work because Spark's reader decodes both under the explicit
-    schema and ``read_watermark``'s pyarrow scan casts INT96 and
-    normalizes the timezone. Do not remove either normalization on the
-    strength of an "identical encoding" assumption.
-
-    Crash atomicity: write to a dot-prefixed temp name (invisible to
-    Spark listings) in the target dir, flush+fsync the file, rename into
-    place, fsync the directory — readers never see a partial file and a
-    post-rename crash cannot surface a truncated one.
+    Crash atomicity: write a dot-prefixed temp name (invisible to
+    listings), fsync it, rename into place, fsync the directory.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -160,9 +151,8 @@ def _sanitize(name: str) -> str:
 
 
 def _is_source_table_dir(entry: str) -> bool:
-    """A live per-source audit table directory. compact() staging/old dirs
-    are dot-prefixed so they can never match, but keep the explicit
-    exclusion as a second line against leftovers from older layouts."""
+    """A live per-source audit table directory. compact() stages outside
+    ``path``; the exclusion guards against leftovers of older layouts."""
     return entry.startswith("ETL_JOB_LOG_INCREMENTAL_DATE_") and not (
         ".compact-" in entry or ".old-" in entry
     )
@@ -204,42 +194,44 @@ class WatermarkStore:
             f"{_sanitize(cdc_table)}_{_sanitize(target_table or '')}"
         )
 
+    def _tables(self) -> list[tuple[str, str]]:
+        """(name, directory) of each audit table: ``path``, or per source."""
+        if not os.path.isdir(self.path):
+            return []
+        if not self.per_source_naming:
+            return [(os.path.basename(self.path.rstrip("/")), self.path)]
+        return [
+            (e, f"{self.path}/{e}")
+            for e in sorted(os.listdir(self.path))
+            if _is_source_table_dir(e)
+        ]
+
+    def _journal(self) -> str:
+        """compact()'s swap journal, a sibling that outlives ``path``."""
+        parent, base = os.path.split(self.path.rstrip("/"))
+        return os.path.join(parent, f".{base}.compact.json")
+
     def _read(self, cdc_table: str | None = None, target_table: str | None = None) -> DataFrame:
+        roll_forward(self._journal())
         if self.per_source_naming and cdc_table is None:
             # union every per-source table (history() over the deployment)
-            dirs = (
-                [
-                    f"{self.path}/{e}"
-                    for e in sorted(os.listdir(self.path))
-                    if _is_source_table_dir(e)
-                ]
-                if os.path.isdir(self.path)
-                else []
-            )
-            if not dirs:
-                return self.spark.createDataFrame([], AUDIT_SCHEMA)
-            return self.spark.read.schema(AUDIT_SCHEMA).parquet(*dirs)
-        d = self._table_dir(cdc_table, target_table)
-        if not os.path.isdir(d):
+            dirs = [d for _, d in self._tables()]
+        else:
+            d = self._table_dir(cdc_table, target_table)
+            dirs = [d] if os.path.isdir(d) else []
+        if not dirs:
             return self.spark.createDataFrame([], AUDIT_SCHEMA)
-        return self.spark.read.schema(AUDIT_SCHEMA).parquet(d)
+        return self.spark.read.schema(AUDIT_SCHEMA).parquet(*dirs)
 
     def read_watermark(self, cdc_table: str, target_table: str) -> datetime.datetime:
         """``COALESCE(MAX(cdc_end_ts), epoch)`` for this pipeline
-        (merge.sql:111-115). Only SUCCESS runs advance the watermark.
-
-        Read DIRECTLY with pyarrow — no Spark job (r12 optimization,
-        guide §5, the read twin of ``append_row_parquet``: a driver
-        scalar over a bounded audit table should not schedule
-        distributed work; the Spark path measured 0.26 s per call,
-        this is ~ms). pyarrow's dataset reader skips dot/underscore
-        files (same hidden-file rule as Spark's listing) and reads both
-        writers' files — Spark-written parts are INT96 timestamps on
-        this install, the pyarrow appends int64 micros tz=UTC; the
-        dataset scan casts both and the tz-normalization below maps
-        either to the engine's naive-UTC convention (both branches are
-        load-bearing). Equality with the Spark aggregate over a
-        mixed-writer store is pinned by a regression test."""
+        (merge.sql:111-115); only SUCCESS runs advance it. Read DIRECTLY
+        with pyarrow, no Spark job (the Spark path measured 0.26 s per
+        call). The dataset scan skips dot/underscore files like Spark's
+        listing and casts both writers' timestamp encodings; the
+        tz-normalization below maps either to naive UTC. Equality with
+        the Spark aggregate over a mixed-writer store is regression-tested."""
+        roll_forward(self._journal())
         d = self._table_dir(cdc_table, target_table)
         if not os.path.isdir(d):
             return EPOCH
@@ -278,6 +270,7 @@ class WatermarkStore:
         run_id: str | None = None,
     ) -> str:
         """K5: append one audit row (merge.sql:531-581; step-8:572-626)."""
+        roll_forward(self._journal())
         run_id = run_id or str(uuid.uuid4())
         append_row_parquet(
             self._table_dir(cdc_table, target_table),
@@ -342,36 +335,25 @@ class WatermarkStore:
 
         Each run appends a one-row file; a long-running deployment calls
         this periodically (the small-file problem of append-only audit
-        tables). Returns the number of rows compacted. Staged write + dir
-        swap, same commit shape as the merge target.
+        tables). Returns the number of rows compacted. Every table (one,
+        or one per source) is staged in a dot-prefixed sibling tree, then
+        all swap in through ONE journaled publish (``index_io``) that the
+        store's next call rolls forward after a crash.
         """
-        import shutil
-        import uuid as _uuid
-
-        def _compact_dir(d: str) -> int:
-            if not os.path.isdir(d):
-                return 0
-            df = self.spark.read.schema(AUDIT_SCHEMA).parquet(d)
-            n = df.count()
-            # Staging/old live under a dot-prefixed basename so a crash
-            # between the staged write and cleanup can never leave a
-            # directory that the ETL_JOB_LOG_INCREMENTAL_DATE_ listdir scan
-            # (_read/compact) unions into the audit table (double-count).
-            parent, base = os.path.split(d)
-            staging = os.path.join(parent, f".compact-{base}-{_uuid.uuid4().hex[:8]}")
-            df.coalesce(target_files).write.parquet(staging)
-            old = os.path.join(parent, f".old-{base}-{_uuid.uuid4().hex[:8]}")
-            os.rename(d, old)
-            os.rename(staging, d)
-            shutil.rmtree(old, ignore_errors=True)
-            return n
-
-        if not self.per_source_naming:
-            return _compact_dir(self.path)
-        if not os.path.isdir(self.path):
+        roll_forward(self._journal())
+        pairs = self._tables()
+        if not pairs:
             return 0
-        return sum(
-            _compact_dir(f"{self.path}/{e}")
-            for e in sorted(os.listdir(self.path))
-            if _is_source_table_dir(e)
-        )
+        parent, base = os.path.split(self.path.rstrip("/"))
+        staging = os.path.join(parent, f".compact-{base}-{uuid.uuid4().hex[:8]}")
+        n = 0
+        try:
+            for name, d in pairs:
+                df = self.spark.read.schema(AUDIT_SCHEMA).parquet(d)
+                n += df.count()
+                df.coalesce(target_files).write.parquet(os.path.join(staging, name))
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        publish_dirs(self._journal(), staging, pairs)
+        return n

@@ -1355,7 +1355,7 @@ FOLD_DEL_MOD = 7  # post-fold delete batch: survivors with user_id % 7 == 0
 
 def q_dv_fold_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The merge-on-read fold lifecycle whose read-tax economics
-    scripts/dv_read_bench.py measured (SCALE.md "DV mask read tax"),
+    SCALE.md "DV mask read tax and the fold crossover" records,
     semantics now hash-gated end to end: one full-window merge leaves
     the final-op-'d' keys as TOMBSTONES (``mask_before_fold`` row counts
     them); the masked read and the post-``compact()`` folded read must

@@ -289,41 +289,47 @@ def test_dual_audit_tables(spark):
     assert failed["error_msg"] and "boom" in failed["error_msg"]
 
 
-def test_commit_manifest_crash_detection(spark):
-    """The bucket-swap commit writes a manifest before the first swap and
-    removes it after the last: a mid-swap crash is detectable via
-    pending_commit() and flagged (then reconverged) on the next merge."""
-    import json
-    import logging
+def test_commit_manifest_crash_detection(spark, monkeypatch):
+    """The bucket-swap commit journals its swap before the first rename:
+    a crash inside the swap is detectable via pending_commit(), keeps the
+    staged tree it names, and the next run_merge rolls the swap forward
+    before it reads (no warning, no lost rows)."""
     import os
 
     from dataplatform_cdc_pipeline_spark.engine import run_merge
 
     cfg, target, audit = pipeline(spark)
     run_merge(spark, cfg, target, audit,
-              raw=bronze(spark, [("c", 1, 1, 1, 1.0)]), window=(None, None),
-              deterministic_audit=True)
+              raw=bronze(spark, [("c", 1, 1, 1, 1.0), ("c", 2, 2, 2, 2.0)]),
+              window=(None, None), deterministic_audit=True)
     assert target.pending_commit() is None  # clean commit removed it
 
-    # simulate a crash that left the manifest behind
-    with open(os.path.join(target.path, target.MANIFEST), "w") as f:
-        json.dump({"staging": "gone", "buckets": [0]}, f)
-    assert target.pending_commit() == {"staging": "gone", "buckets": [0]}
+    # crash at the version write: every bucket is already swapped in
+    real = os.replace
 
-    logger = logging.getLogger("dataplatform_cdc_pipeline_spark.merge_target")
-    records = []
-    h = logging.Handler()
-    h.emit = records.append
-    logger.addHandler(h)
-    try:
+    def replace(src, dst):
+        if str(dst).endswith(target.VERSION):
+            raise OSError("crash before the version write")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="crash before the version write"):
         run_merge(spark, cfg, target, audit,
-                  raw=bronze(spark, [("u", 2, 2, 1, 9.0)]), window=(None, None),
+                  raw=bronze(spark, [("u", 3, 3, 1, 9.0)]), window=(None, None),
                   deterministic_audit=True)
-    finally:
-        logger.removeHandler(h)
-    assert any("crashed mid-swap" in r.getMessage() for r in records)
-    assert target.pending_commit() is None  # reconverged, manifest cleared
-    assert state(target) == [(1, 9.0)]
+    monkeypatch.undo()
+    pending = target.pending_commit()
+    assert pending is not None and os.path.isdir(pending["staging"])
+    assert target._read_version() == 1
+
+    # the next writer finishes the swap, then applies its own window
+    run_merge(spark, cfg, target, audit,
+              raw=bronze(spark, [("u", 4, 4, 2, 8.0)]), window=(None, None),
+              deterministic_audit=True)
+    assert target.pending_commit() is None and target.vacuum() == []
+    assert not os.path.isdir(pending["staging"])
+    assert target._read_version() == 3
+    assert state(target) == [(1, 9.0), (2, 8.0)]
 
 
 def test_per_source_audit_naming(spark, tmp_path):
