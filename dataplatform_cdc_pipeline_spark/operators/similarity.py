@@ -57,10 +57,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def floor6(x: Column) -> Column:
     """Truncate to 6 decimals — deterministic across engines for
     bit-identical inputs, unlike round() whose half-up boundary handling

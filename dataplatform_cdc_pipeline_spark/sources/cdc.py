@@ -23,6 +23,13 @@ from pyspark.sql import types as T
 
 from dataplatform_cdc_pipeline_spark.config import MergeConfig
 
+#: The landed bronze table's columns, as :func:`synthesize_cdc_from_events`
+#: produces them; streaming readers declare it instead of inferring it.
+BRONZE_SCHEMA = (
+    "data string, load_ts timestamp, publish_time timestamp, "
+    "message_id string, source_db_table string, subscription_name string"
+)
+
 #: Typed silver target exercised by the synthetic feed: latest state per user.
 USER_STATE_SCHEMA = T.StructType(
     [

@@ -161,9 +161,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = normalize_ntz(df)
     _check_contract(name, df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for SQL-side operators."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -18,7 +18,6 @@ production crawl pipeline actually wants.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,12 +26,7 @@ from pyspark.sql import functions as F
 from dataplatform_cdc_pipeline_spark.operators.bm25_index import (
     IncrementalBm25Index,
 )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches, read_or_empty
 
 
 def stream_bm25_index(
@@ -41,12 +35,10 @@ def stream_bm25_index(
     source_schema: str,
     work_dir: str,
     query_terms: Sequence[str],
-    top_k: int = 20,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain ``source_path`` (parquet files of (doc_id, text), one
     micro-batch per file in mtime order) through the incremental BM25
-    loop; returns the accumulated per-batch search snapshots
+    loop; returns the accumulated per-batch top-20 search snapshots
     (batch, doc_id, bm25)."""
     idx = IncrementalBm25Index(spark, f"{work_dir}/index")
     searches = f"{work_dir}/searches"
@@ -54,7 +46,7 @@ def stream_bm25_index(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.add_batch(f"b{batch_id}", batch_df.select("doc_id", "text"))
         scope = F.expr(f"CAST(substring(batch, 2) AS BIGINT) <= {batch_id}")
-        snap = idx.search(query_terms, top_k=top_k, batch_filter=scope)
+        snap = idx.search(query_terms, top_k=20, batch_filter=scope)
         (
             snap.withColumn("batch", F.lit(f"b{batch_id}"))
             .write.mode("overwrite")
@@ -63,17 +55,12 @@ def stream_bm25_index(
             .parquet(searches)
         )
 
-    q = (
+    stream = (
         spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return _read_or_empty(
+    drain_batches(stream, process, f"{work_dir}/ckpt")
+    return read_or_empty(
         spark, searches, "doc_id long, bm25 double, batch string"
     ).select("batch", "doc_id", "bm25")

@@ -26,18 +26,11 @@ ranges) is the maintenance audit a production pipeline monitors.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark.operators.compaction import sort_pack_bins
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches, read_or_empty
 
 
 def stream_compact_runs(
@@ -48,7 +41,6 @@ def stream_compact_runs(
     key: str = "event_id",
     compact_every: int = 2,
     bins_per_run: int = 3,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Drain ``source_path`` (one parquet file per micro-batch, mtime
     order) through the landing + run-consolidation loop. Artifacts land
@@ -88,17 +80,12 @@ def stream_compact_runs(
                 .parquet(runs)
             )
 
-    q = (
+    stream = (
         spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    drain_batches(stream, process, f"{work_dir}/ckpt")
 
 
 def run_stats(
@@ -113,7 +100,7 @@ def run_stats(
     key sum and min/max (the footer-stat ranges sort-compaction exists
     to restore) — plus one row per uncompacted landing-tail batch.
     Output: (phase, id, bin, n_rows, sum_key, min_key, max_key)."""
-    runs = _read_or_empty(
+    runs = read_or_empty(
         spark, f"{work_dir}/runs",
         f"bin long, {data_cols_schema}, run string",
     )
@@ -134,7 +121,7 @@ def run_stats(
     )
     n_consolidated = (n_batches // compact_every) * compact_every
     tail = (
-        _read_or_empty(
+        read_or_empty(
             spark, f"{work_dir}/landing",
             f"{data_cols_schema}, batch string",
         )

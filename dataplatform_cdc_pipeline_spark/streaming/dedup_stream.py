@@ -23,23 +23,11 @@ lazy-read-after-mutation hazard ivm.py documents.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataplatform_cdc_pipeline_spark.operators.dedup_index import IncrementalLshIndex
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a batch-partitioned parquet dir that may not exist yet, or
-    may hold zero data files (a drain that produced no rows still
-    commits the directory). The DECLARED schema makes both read as zero
-    rows instead of failing schema inference; a real read error still
-    propagates."""
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches, read_or_empty
 
 
 def stream_incremental_dedup(
@@ -48,7 +36,6 @@ def stream_incremental_dedup(
     source_schema: str,
     work_dir: str,
     threshold: float = 0.5,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain ``source_path`` (parquet files of (doc_id, text), one
     micro-batch per file in mtime order) through the incremental dedup
@@ -67,7 +54,7 @@ def stream_incremental_dedup(
         # reconstructs exactly the pre-crash view (replay test pins it)
         earlier = F.expr(f"CAST(substring(batch, 2) AS BIGINT) < {batch_id}")
         docs = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
-        prior = _read_or_empty(
+        prior = read_or_empty(
             spark, archive, "doc_id long, text string, batch string"
         ).filter(earlier)
         corpus = prior.select("doc_id", "text").unionByName(docs)
@@ -92,19 +79,14 @@ def stream_incremental_dedup(
             .parquet(archive)
         )
 
-    q = (
+    stream = (
         spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    drain_batches(stream, process, f"{work_dir}/ckpt")
     # a corpus with zero near-dups writes no pairs partitions at all
-    return _read_or_empty(
+    return read_or_empty(
         spark,
         pairs_path,
         "new_id long, other_id long, kind string, jaccard double, batch string",

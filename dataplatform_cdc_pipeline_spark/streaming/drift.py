@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches
+
 
 def bin_expr(value_col: str, vmin: float, vmax: float, n_bins: int):
     """Frozen-edge equal-width bin id with edge clamping."""
@@ -57,13 +59,7 @@ def run_streaming_histogram(
         # deterministic per-batch content + overwrite = replay-idempotent
         counts.write.mode("overwrite").parquet(f"{state_path}/batch={batch_id}")
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_batches(stream, process_batch, checkpoint_path)
 
 
 def histogram_state(spark: SparkSession, state_path: str) -> DataFrame:

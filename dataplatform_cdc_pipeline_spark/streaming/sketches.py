@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataplatform_cdc_pipeline_spark.operators.sketches import kmv_sketch
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches
 
 
 def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -75,10 +76,4 @@ def run_streaming_distinct_sketch(
         )
         merged.write.mode("overwrite").parquet(state_path)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_batches(stream, process_batch, checkpoint_path)

@@ -19,14 +19,16 @@ operator against a DuckDB oracle despite the state store in the middle.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -65,49 +67,58 @@ def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd
     )
 
 
+def _drain_state(
+    spark: SparkSession,
+    source_path: str,
+    schema: str,
+    key: str,
+    update,
+    output_schema: T.StructType,
+    state_schema: T.StructType,
+    checkpoint_path: str,
+    output_path: str | None,
+) -> DataFrame:
+    """Drain ``source_path`` through ``applyInPandasWithState(update)``
+    grouped by ``key``; every emitted row is appended to ``output_path``
+    (default ``<checkpoint_path>_out``; the memory sink cannot recover a
+    checkpoint), and all rows emitted so far are returned."""
+    output_path = output_path or f"{checkpoint_path}_out"
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(output_path)
+
+    stateful = (
+        spark.readStream.schema(schema)
+        .parquet(source_path)
+        .groupBy(key)
+        .applyInPandasWithState(
+            update, output_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        )
+    )
+    drain_batches(stateful, sink, checkpoint_path)
+    return spark.read.schema(output_schema).parquet(output_path)
+
+
 def running_user_totals(
     spark: SparkSession,
     source_path: str,
     schema: str = "event_id long, ts timestamp, user_id long, value double",
-    checkpoint_path: str | None = None,
+    *,
+    checkpoint_path: str,
     output_path: str | None = None,
 ) -> DataFrame:
     """Drain the source with availableNow, maintaining per-user running
     totals in the state store; returns the latest emitted row per user.
 
-    Sink = ``foreachBatch`` → parquet appends (memory sink cannot recover
-    a checkpoint); re-invoking with the same checkpoint resumes BOTH the
-    source offsets and the state store — totals keep accumulating across
-    restarts, which is the whole point of the state store.
+    Sink = ``foreachBatch`` → parquet appends at ``output_path``;
+    re-invoking with the same checkpoint resumes BOTH the source offsets
+    and the state store — totals keep accumulating across restarts,
+    which is the whole point of the state store.
     """
-    name = f"rut_{uuid.uuid4().hex[:8]}"
-    checkpoint_path = checkpoint_path or f"/tmp/{name}_ckpt"
-    output_path = output_path or f"{checkpoint_path}_out"
-    stream = spark.readStream.schema(schema).parquet(source_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(output_path)
-
-    q = (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    out = _drain_state(
+        spark, source_path, schema, "user_id", _update, OUTPUT_SCHEMA, STATE_SCHEMA,
+        checkpoint_path, output_path,
     )
-    q.awaitTermination()
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
@@ -168,45 +179,22 @@ def _topk_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterat
 def running_topk_per_type(
     spark: SparkSession,
     source_path: str,
-    schema: str = "event_id long, ts timestamp, event_type string, value double",
-    checkpoint_path: str | None = None,
+    checkpoint_path: str,
     output_path: str | None = None,
 ) -> DataFrame:
     """Cross-batch top-K per key in the state store (the leaderboard /
-    alerting-threshold shape): state is K scalars per key — NOT the
+    alerting-threshold shape) over (event_id, ts, event_type, value)
+    files: state is K scalars per key — NOT the
     event history — so memory is O(keys·K) no matter how long the
     stream runs. Same exact-integer discipline as running_user_totals:
     micro-unit values + a deterministic (value DESC, id ASC) tie-break
     make the drained leaderboard independent of micro-batch boundaries
     and hash-checkable against a batch window oracle."""
-    name = f"rtk_{uuid.uuid4().hex[:8]}"
-    checkpoint_path = checkpoint_path or f"/tmp/{name}_ckpt"
-    output_path = output_path or f"{checkpoint_path}_out"
-    stream = spark.readStream.schema(schema).parquet(source_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(output_path)
-
-    q = (
-        stream.groupBy("event_type")
-        .applyInPandasWithState(
-            _topk_update,
-            TOPK_OUTPUT_SCHEMA,
-            TOPK_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    out = _drain_state(
+        spark, source_path, "event_id long, ts timestamp, event_type string, value double",
+        "event_type", _topk_update, TOPK_OUTPUT_SCHEMA, TOPK_STATE_SCHEMA,
+        checkpoint_path, output_path,
     )
-    q.awaitTermination()
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    out = spark.read.schema(TOPK_OUTPUT_SCHEMA).parquet(output_path)
     w = Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
     return (
         out.withColumn("mx", F.max("n_seen").over(w))

@@ -18,6 +18,8 @@ mapping (SURVEY.md §2.8, §3.4) is:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,6 +27,9 @@ from dataplatform_cdc_pipeline_spark.config import MergeConfig
 from dataplatform_cdc_pipeline_spark.engine import run_merge
 from dataplatform_cdc_pipeline_spark.operators.merge_target import ParquetMergeTarget
 from dataplatform_cdc_pipeline_spark.operators.watermark import WatermarkStore
+from dataplatform_cdc_pipeline_spark.plans.merge_plan import build_changes, window_scan
+from dataplatform_cdc_pipeline_spark.sources.cdc import BRONZE_SCHEMA
+from dataplatform_cdc_pipeline_spark.streaming import drain_batches
 
 
 def run_streaming_merge(
@@ -34,9 +39,6 @@ def run_streaming_merge(
     audit: WatermarkStore,
     source_path: str,
     checkpoint_path: str,
-    bronze_schema: str = "data string, load_ts timestamp, publish_time timestamp, "
-    "message_id string, source_db_table string, subscription_name string",
-    trigger_once: bool = True,
     deterministic_audit: bool = False,
     source_format: str = "parquet",
     transform=None,
@@ -45,12 +47,10 @@ def run_streaming_merge(
 
     Each micro-batch runs the full batch core via ``run_merge`` with the
     batch frame as ``raw`` and an unbounded window — the checkpoint already
-    scoped the rows. ``trigger_once`` processes all available input then
-    stops (the batch-parity mode used in tests); continuous deployments
-    drop it and set a processing-time trigger.
+    scoped the rows. The drain processes all available input, then stops.
 
     ``source_format``: 'parquet' (a landed bronze table of
-    ``bronze_schema`` shape) or 'text' (raw wire payloads, one per line —
+    ``BRONZE_SCHEMA`` shape) or 'text' (raw wire payloads, one per line —
     e.g. a Debezium topic dump; the lines arrive as a ``value`` column).
     ``transform``: optional stream→bronze normalizer applied before the
     merge loop (pure-Column transforms compose with streaming frames —
@@ -71,38 +71,24 @@ def run_streaming_merge(
     if source_format == "text":
         stream = spark.readStream.text(source_path)
     elif source_format == "parquet":
-        stream = spark.readStream.schema(bronze_schema).parquet(source_path)
+        stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(source_path)
     else:
         raise ValueError(f"unsupported source_format '{source_format}'")
     if transform is not None:
         stream = transform(stream)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_once:
-        q.awaitTermination()
-    return q
+    return drain_batches(stream, process_batch, checkpoint_path)
 
 
-def streaming_dedup_within_watermark(
-    stream: DataFrame,
-    cfg: MergeConfig,
-    event_ts_col: str = "source_ts_ns_order",
-    delay: str = "10 minutes",
-) -> DataFrame:
+def streaming_dedup_within_watermark(stream: DataFrame, cfg: MergeConfig) -> DataFrame:
     """Stricter-than-reference cross-batch dedup: drop replayed events for
-    the same (pk, event-ts) within the watermark horizon.
+    the same (pk, ``source_ts_ns_order``) within a 10-minute watermark.
 
     The reference has no cross-batch state (SURVEY.md §2.8) — this is the
     opt-in upgrade using Spark's built-in state store.
     """
-    return stream.withWatermark(event_ts_col, delay).dropDuplicatesWithinWatermark(
-        [*cfg.pk, event_ts_col]
+    ts = "source_ts_ns_order"
+    return stream.withWatermark(ts, "10 minutes").dropDuplicatesWithinWatermark(
+        [*cfg.pk, ts]
     )
 
 
@@ -118,8 +104,6 @@ def read_tagged_view(spark: SparkSession, view_path: str):
     (None, None) ONLY when no view exists yet. Real read errors (corrupt
     or partial state) propagate instead of silently resetting the view
     (fail-loudly, same rule as streaming/sketches._read_state)."""
-    import os
-
     if not os.path.exists(view_path):
         return None, None
     df = spark.read.parquet(view_path)
@@ -137,10 +121,6 @@ def run_streaming_merge_with_view(
     view_path: str,
     group_col: str,
     sum_exprs=None,
-    count_col: str = "n",
-    bronze_schema: str = "data string, load_ts timestamp, publish_time timestamp, "
-    "message_id string, source_db_table string, subscription_name string",
-    trigger_once: bool = True,
     deterministic_audit: bool = False,
 ):
     """Streaming CDC merge that also MAINTAINS a grouped aggregate view
@@ -175,7 +155,7 @@ def run_streaming_merge_with_view(
             if tag is not None and tag >= batch_id:
                 return  # replayed batch: view already maintained
             new_view = view_delta_for_merge(
-                target, changes, view, group_col, sum_exprs, count_col
+                target, changes, view, group_col, sum_exprs
             )  # eagerly checkpointed — safe to overwrite its own input
             new_view.withColumn(_VIEW_TAG, F.lit(batch_id)).write.mode(
                 "overwrite"
@@ -192,18 +172,8 @@ def run_streaming_merge_with_view(
             pre_merge_hook=maintain,
         )
 
-    stream = spark.readStream.schema(bronze_schema).parquet(source_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_once:
-        q.awaitTermination()
-    return q
+    stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(source_path)
+    return drain_batches(stream, process_batch, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------
@@ -218,9 +188,6 @@ def run_streaming_scd2(
     source_path: str,
     checkpoint_path: str,
     schema,
-    bronze_schema: str = "data string, load_ts timestamp, publish_time timestamp, "
-    "message_id string, source_db_table string, subscription_name string",
-    trigger_once: bool = True,
     deterministic_audit: bool = False,
 ):
     """Stream a bronze landing directory into an SCD2 history sink
@@ -238,10 +205,7 @@ def run_streaming_scd2(
     than silently splicing duplicate versions — the engine's fail-loud
     convention for the one crash window bucket-level commits can't
     cover."""
-    import os
-
     from dataplatform_cdc_pipeline_spark.operators.scd2 import build_version_events
-    from dataplatform_cdc_pipeline_spark.plans.merge_plan import window_scan
 
     tag_path = os.path.join(target.path, "_stream_batch_id")
 
@@ -262,18 +226,8 @@ def run_streaming_scd2(
         with open(tag_path, "w") as f:
             f.write(str(batch_id))
 
-    stream = spark.readStream.schema(bronze_schema).parquet(source_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_once:
-        q.awaitTermination()
-    return q
+    stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(source_path)
+    return drain_batches(stream, process_batch, checkpoint_path)
 
 
 def run_streaming_merge_txn(
@@ -284,8 +238,6 @@ def run_streaming_merge_txn(
     source_path: str,
     checkpoint_path: str,
     app_id: str,
-    bronze_schema: str = "data string, load_ts timestamp, publish_time timestamp, "
-    "message_id string, source_db_table string, subscription_name string",
     deterministic_audit: bool = False,
 ):
     """Streaming merge with END-TO-END exactly-once: each micro-batch's
@@ -345,17 +297,8 @@ def run_streaming_merge_txn(
         finally:
             audit.stream_txn = None
 
-    q = (
-        spark.readStream.schema(bronze_schema)
-        .parquet(source_path)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(source_path)
+    return drain_batches(stream, process_batch, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------
@@ -371,9 +314,6 @@ def run_streaming_merge_dlq(
     schema,
     source_path: str,
     checkpoint_path: str,
-    bronze_schema: str = "data string, load_ts timestamp, publish_time timestamp, "
-    "message_id string, source_db_table string, subscription_name string",
-    trigger_once: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Streaming front-end of the DLQ merge mode: every micro-batch is
@@ -389,10 +329,6 @@ def run_streaming_merge_dlq(
     as the plain streaming merge, extended to the quarantine leg.
     ``max_files_per_trigger`` bounds each micro-batch for mtime-ordered
     file-per-batch staging (tests / the gate query)."""
-    from dataplatform_cdc_pipeline_spark.plans.merge_plan import (
-        build_changes,
-        window_scan,
-    )
     from dataplatform_cdc_pipeline_spark.plans.quarantine import quarantine_split
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -409,18 +345,8 @@ def run_streaming_merge_dlq(
         target.merge(build_changes(clean, schema, cfg, deterministic_audit=True))
         dlq_target.merge(cq)
 
-    reader = spark.readStream.schema(bronze_schema)
+    reader = spark.readStream.schema(BRONZE_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(source_path)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_once:
-        q.awaitTermination()
-    return q
+    return drain_batches(stream, process_batch, checkpoint_path)

@@ -4,6 +4,9 @@ import datetime
 import json
 import tempfile
 
+import pytest
+
+from dataplatform_cdc_pipeline_spark.sources.cdc import BRONZE_SCHEMA
 from dataplatform_cdc_pipeline_spark.streaming import run_streaming_merge
 from tests.helpers import BASE_NS, pipeline, state
 
@@ -19,11 +22,7 @@ def write_bronze(spark, path, rows):
             (payload, datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=pos),
              datetime.datetime(2024, 1, 1), f"m-{pos}", "demo.t", "sub")
         )
-    spark.createDataFrame(
-        data,
-        "data string, load_ts timestamp, publish_time timestamp, "
-        "message_id string, source_db_table string, subscription_name string",
-    ).coalesce(1).write.mode("append").parquet(path)
+    spark.createDataFrame(data, BRONZE_SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
 def test_streaming_merge_incremental(spark):
@@ -47,6 +46,59 @@ def test_streaming_merge_incremental(spark):
     # replaying with the same checkpoint is a no-op (exactly-once)
     run_streaming_merge(spark, cfg, target, audit, src, ckpt, deterministic_audit=True)
     assert state(target) == [(1, 9.0)]
+
+
+def test_streaming_merge_restart_after_failed_batch(spark, tmp_path, monkeypatch):
+    """foreachBatch kill point: a micro-batch dies after the merge publish
+    and its SUCCESS audit row but before foreachBatch returns. The
+    checkpoint never commits that batch, so the restart replays it; the
+    idempotent merge converges on the window's state and the watermark."""
+    from pyspark.errors import StreamingQueryException
+
+    from dataplatform_cdc_pipeline_spark.operators.watermark import WatermarkStore
+
+    src, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    cfg, target, audit = pipeline(spark, tmpdir=str(tmp_path))
+    seed = [("c", 1, 1, 1, 1.0), ("c", 2, 2, 2, 2.0)]
+    window = [("u", 3, 3, 1, 9.0), ("d", 4, 4, 2, 0.0), ("c", 5, 5, 3, 5.0)]
+    write_bronze(spark, src, seed)
+    run_streaming_merge(spark, cfg, target, audit, src, ckpt, deterministic_audit=True)
+
+    # latest event per key by (ts, pos), deletes dropped
+    latest = {}
+    for op, ts, pos, uid, value in seed + window:
+        if uid not in latest or (ts, pos) > latest[uid][:2]:
+            latest[uid] = (ts, pos, op, value)
+    expected = sorted((uid, v) for uid, (_, _, op, v) in latest.items() if op != "d")
+
+    append_job_log = WatermarkStore.append_job_log
+    crashed = []
+
+    def crash_once(self, *args, **kwargs):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("injected crash before foreachBatch returns")
+        return append_job_log(self, *args, **kwargs)
+
+    monkeypatch.setattr(WatermarkStore, "append_job_log", crash_once)
+    write_bronze(spark, src, window)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_streaming_merge(spark, cfg, target, audit, src, ckpt, deterministic_audit=True)
+    assert crashed and state(target) == expected  # the publish happened
+
+    run_streaming_merge(spark, cfg, target, audit, src, ckpt, deterministic_audit=True)
+    assert state(target) == expected
+    assert target.pending_commit() is None
+    window_end = datetime.datetime(2024, 1, 1) + datetime.timedelta(
+        seconds=max(pos for _, _, pos, _, _ in window)
+    )
+    assert audit.read_watermark(cfg.cdc_table, cfg.target_table) == window_end
+    # the replay re-ran the batch: a second SUCCESS row for the same window
+    ends = [
+        r["cdc_end_ts"]
+        for r in audit.history().filter("run_status = 'SUCCESS'").collect()
+    ]
+    assert ends.count(window_end) == 2
 
 
 def test_stream_tumbling_counts_equals_batch(spark, sf_dir):
